@@ -11,9 +11,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the full box (32 hw threads); the driver can pin
-    // parallelism with SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // wall budget for the TIMED PASSES (VERDICT r17 item 1: the protocol
     // outgrew the driver's timeout and the artifact died with it — the
     // bench now sheds passes, never the artifact): before starting a
@@ -22,26 +19,7 @@ object Bench {
     // and the artifact says so. Loaded-box runs complete with fewer
     // samples; idle runs are untouched.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition coalescing sized by DATA, not by the box (round 20,
-      // guide §2.2/§9: target advisoryPartitionSizeInBytes instead of
-      // maximizing parallelism): with parallelismFirst (the default) every
-      // tiny post-shuffle stage still launches ~cpus tasks, and at sf0.1
-      // the suite's cost is per-task scheduling overhead, not compute. At
-      // production scale the SAME setting yields the guide's 64 MB-advisory
-      // partition count — this is the scale-honest value, not a local[32]
-      // tweak (verified on the 8-core run: same direction, same plans).
-      // Set in the BUILDER conf so child sessions (newSession) inherit it.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietBoundedWindowWarnings()
+    val spark = Sessions.local(Sessions.cores)
     // a PREVIOUS run's artifacts must not masquerade as this one's if
     // this run dies before writing them (review r18: a kill during pass 1
     // would have left the prior round's complete:true line and a

@@ -87,9 +87,6 @@ object IndexStore {
         p
       }
 
-  /** Drop the resolution memo (tests that simulate foreign publishes). */
-  def invalidateResolution(): Unit = resolved.clear()
-
   /** Build and publish the next generation: `write` receives the staging
     * directory and must leave a complete store in it. Returns the
     * published generation's path. Serialized per root within the JVM. */

@@ -38,7 +38,11 @@ object Serve {
     def stop(): Unit = { server.stop(0); exec.shutdown() }
   }
 
-  private def jsonQuote(s: String): String =
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in query-authored SQL would otherwise make
+    * a JSON reader of Verify's oracle_sql.json fail and drop every oracle
+    * comparison. `null` quotes as the empty string. */
+  private[graft] def jsonQuote(s: String): String =
     "\"" + Option(s).getOrElse("").flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

@@ -133,14 +133,14 @@ object StatsCatalog {
     * This is the dominant fixed cost of the ~40 lifecycle-class judged
     * queries, each of which builds a scratch store per invocation and then
     * plans against it. `values` maps kind → exactly the object the kind's
-    * reader would have produced (PrimeParitySpec pins byte-equality
+    * reader would have produced (Round20Spec pins byte-equality
     * against a forced re-read); `base` is the generation the content
     * describes, so the TTL-expiry revalidation and foreign-publish
     * detection behave exactly as for read-backed entries. */
   def prime(dir: String, base: String, values: Map[String, AnyRef]): Unit =
     values.foreach { case (kind, v) => putBounded((kind, dir), v, base) }
 
-  /** Test seam (PrimeParitySpec): drop `dir`'s entries and re-read every
+  /** Test seam (Round20Spec): drop `dir`'s entries and re-read every
     * kind from parquet, returning the maps a cold reader computes. */
   private[graft] def rereadAll(spark: SparkSession, dir: String): Map[String, AnyRef] = {
     invalidate(dir)

@@ -62,6 +62,19 @@ object SummaryRouting {
     ()
   }
 
+  /** Whether `df`'s optimized plan scans a file relation rooted under
+    * `dir` — the "routing engaged" check, made on the relation's root
+    * paths because plan strings abbreviate file locations longer than
+    * `spark.sql.maxMetadataStringLength`. */
+  def scansUnder(df: DataFrame, dir: String): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.exists(_.toUri.getPath.startsWith(dir))
+        case _ => false
+      }
+      case _ => false
+    }
+
   /** Install the rule on the session once. */
   def ensure(spark: SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraOptimizations

@@ -1126,22 +1126,16 @@ object Advanced {
         .orderBy("d")
     })
 
+  private val dppBuilt =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
   /** Deterministic per-fixture home of the q266 partitioned catalog:
     * `events_by_day` (fact, PARTITIONED BY the DATE column d) and `days`
     * (scan-backed day dimension with a precomputed top-3-busiest flag —
     * DPP requires the selective predicate to sit on a file scan, not a
     * LocalRelation or an in-plan aggregate).
     */
-  private def dppDir(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_dpp/$tag").getAbsolutePath
-  }
-  /** Exposed for PlanAuditSpec's partition-count assertion. */
-  def dppDirFor(dir: String): String = dppDir(dir)
-  private val dppBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
   private[graft] def ensureDppCatalog(s: SparkSession, dir: String): String = {
-    val p = dppDir(dir)
+    val p = StatsStore.fixtureRoot("graft_dpp", dir)
     dppBuilt.removeIf(k => k._1.sparkContext.isStopped)
     // serialize builds per target path (ADVICE r10): with Serve executing
     // requests concurrently, two SESSIONS can miss each other's (session,

@@ -469,7 +469,7 @@ object Extras {
       try {
         val routed = raw.groupBy("event_type")
           .agg(count(lit(1)).as("n_events"), sum("user_id").as("sum_uid"))
-        require(routed.queryExecution.executedPlan.toString.contains("graft_mv_"),
+        require(graft.plans.SummaryRouting.scansUnder(routed, s"$tmp/summary"),
           "summary routing did not engage — the judged result would not exercise the rewrite")
         // executing the write re-optimizes under the live rule, so the
         // materialized rows are the routed plan's output

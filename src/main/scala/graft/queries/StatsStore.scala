@@ -78,10 +78,6 @@ object StatsStore {
     * cumulative row count reaches ceil(i·n/16). */
   val HistBuckets = 16
 
-  private def statsDir(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_stats/$tag").getAbsolutePath
-  }
   private val builtDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Scratch store root for lifecycle-class judged queries (q287/q292/
@@ -90,6 +86,15 @@ object StatsStore {
     * per lifecycle query per pass (VERDICT r15 item 9). */
   private[graft] def scratchRoot(prefix: String): String =
     scratchDir(prefix) + "/store"
+
+  /** Deterministic per-fixture store root,
+    * `<java.io.tmpdir>/<kind>/<absolute fixture dir, sanitized>`: a store
+    * built from a fixture persists across JVMs and is found again by path
+    * alone, and the fixture directories themselves stay read-only. */
+  private[graft] def fixtureRoot(kind: String, dir: String): String = {
+    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
+    new java.io.File(System.getProperty("java.io.tmpdir"), s"$kind/$tag").getAbsolutePath
+  }
 
   /** A bare JVM-exit-cleaned temp dir (streaming checkpoints etc.). */
   private[graft] def scratchDir(prefix: String): String = {
@@ -118,8 +123,8 @@ object StatsStore {
     * count — exactly Spark's ShiftLeft), the numerator is the exact
     * integer alpha_64·m²·2^55 = 1890844672 · 36028797018963968, and `div`
     * on positive decimals is integral division truncating toward zero —
-    * BigInt `/`. PrimeParitySpec pins primed == re-read for every store a
-    * build publishes. */
+    * BigInt `/`. Round20Spec pins it against [[estExpr]] and pins primed ==
+    * re-read for every kind a build publishes. */
   private[graft] def estFromRegs(regs: Seq[Long]): Long = {
     val sumScaled = regs.foldLeft(0L)((a, r) => a + (1L << (55L - r).toInt))
     ((BigInt(1890844672L) * BigInt(36028797018963968L)) /
@@ -166,16 +171,6 @@ object StatsStore {
       ndvData ++= ndv; rowData += rowN; fanData ++= fan
     }
     (ndvData.result(), rowData.result(), fanData.result())
-  }
-
-  private def analyzeFrames(s: SparkSession, tables: Seq[(String, Seq[String])],
-      resolve: String => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
-    val (ndvRows, rowRows, fanRows) = analyzeRows(s, tables, resolve)
-    (ndvRows.toDF("tbl", "col", "regs")
-       .select(col("tbl"), col("col"), estExpr("regs").as("ndv_est"), col("regs")),
-      rowRows.toDF("tbl", "row_count"),
-      fanRows.toDF("tbl", "col", "avg_len", "max_len"))
   }
 
   /** Guard on the boundary walk's global window: a domain past this many
@@ -444,7 +439,7 @@ object StatsStore {
     * domains are tiny — a counts-map aggregate, not a sort), and the
     * `windows.parquet` interval table the span rows describe. */
   def ensureStats(s: SparkSession, dir: String): String = {
-    val p = statsDir(dir)
+    val p = fixtureRoot("graft_stats", dir)
     p.intern.synchronized {
       if (!builtDirs.contains(p)) {
         // the general analyze surface with the DEFAULT coverage (every
@@ -507,8 +502,6 @@ object StatsStore {
     }
     p
   }
-  /** Exposed for PlanAuditSpec. */
-  def ensureStatsFor(s: SparkSession, dir: String): String = ensureStats(s, dir)
 
   /** One collected register row: (table, column, 64 HLL registers). */
   private type NdvRow = (String, String, Seq[Long])
@@ -603,7 +596,7 @@ object StatsStore {
     * each task so a spec-lowered cap governs pool threads too. Shared with
     * the index-store writers (round 19) — same discipline, same pool.
     * Safe to NEST (round 20): the cached pool never starves a parked
-    * Await, so a task may itself call inParallel (InParallelSpec drives a
+    * Await, so a task may itself call inParallel (Round20Spec drives a
     * deliberately nested call to completion). */
   private[graft] def inParallel[T](tasks: Seq[() => T]): Seq[T] =
     if (tasks.lengthCompare(1) <= 0) tasks.map(_())
@@ -797,7 +790,7 @@ object StatsStore {
 
   /** The seven planner-catalog maps, derived DRIVER-SIDE from content the
     * publisher already holds — exactly what each [[graft.plans.StatsCatalog]]
-    * reader would compute from the written parquet (PrimeParitySpec pins
+    * reader would compute from the written parquet (Round20Spec pins
     * equality kind by kind). Priming the catalog at publish time makes the
     * first planning against a freshly built store cost ZERO Spark jobs;
     * before round 20 every lifecycle-class query paid one

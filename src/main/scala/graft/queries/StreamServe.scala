@@ -27,13 +27,6 @@ import graft.Tables
 object StreamServe {
   private type QFn = (SparkSession, String) => DataFrame
 
-  /** Store root for a fixture's streamed HDR registers. */
-  def hdrStoreRoot(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_regs/$tag").getAbsolutePath
-  }
-
   /** Run a BOUNDED stream to completion (AvailableNow, update mode,
     * throwaway checkpoint), feeding every micro-batch to `onBatch` — the
     * shared shell of the streamed builders below; each caller's
@@ -110,7 +103,7 @@ object StreamServe {
     * events fixture, on an isolated session with the RocksDB state store
     * (the production-shaped provider the streaming specs pin). */
   def ensureStreamedHdr(s: SparkSession, dir: String): String = {
-    val root = hdrStoreRoot(dir)
+    val root = StatsStore.fixtureRoot("graft_stream_regs", dir)
     root.intern.synchronized {
       graft.IndexStore.latestPathCached(root).getOrElse {
         val ss = tuneStreamBuild(s, s.newSession())
@@ -123,13 +116,6 @@ object StreamServe {
     }
   }
 
-  /** Store root for a fixture's streamed HLL registers. */
-  def hllStoreRoot(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_hll/$tag").getAbsolutePath
-  }
-
   /** Build-once streamed HLL registers (per event type over user ids) and
     * publish the final per-type 64-register vector as `hll_regs` parquet
     * under a fresh store generation. Registers grow monotonically under
@@ -137,7 +123,7 @@ object StreamServe {
     * the final state and a put-ordered map replay reconstructs it exactly
     * (same argument as the HDR build above). */
   def ensureStreamedHll(s: SparkSession, dir: String): String = {
-    val root = hllStoreRoot(dir)
+    val root = StatsStore.fixtureRoot("graft_stream_hll", dir)
     root.intern.synchronized {
       graft.IndexStore.latestPathCached(root).getOrElse {
         val ss = tuneStreamBuild(s, s.newSession())
@@ -184,13 +170,6 @@ object StreamServe {
     }
   }
 
-  /** Store root for a fixture's STREAM-UPKEPT planner statistics. */
-  def streamedStatsRoot(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stats_streamed/$tag").getAbsolutePath
-  }
-
   /** The streaming→catalog→planner loop: a stats-store generation whose
     * EVENTS entries are maintained by STREAMS — the row count from a
     * streaming aggregate (last update of a bounded `groupBy().count()`
@@ -205,7 +184,7 @@ object StreamServe {
     * catalog refresh. Published through IndexStore generations like every
     * other store (readers pin complete generations mid-rebuild). */
   def ensureStreamedStats(s: SparkSession, dir: String): String = {
-    val root = streamedStatsRoot(dir)
+    val root = StatsStore.fixtureRoot("graft_stats_streamed", dir)
     // Returns the store ROOT, not the resolved generation (ADVICE r13):
     // callers set the catalog DirKey to the return value, and a pinned
     // generation path would freeze the catalog on one generation — a later
@@ -255,13 +234,6 @@ object StreamServe {
     root
   }
 
-  /** Store root for a fixture's UNIFIED (stream + batch) planner stats. */
-  def unifiedStatsRoot(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stats_unified/$tag").getAbsolutePath
-  }
-
   /** ONE stats root maintained by BOTH writers (VERDICT r13 item 5: the
     * streamed and batch stores were separate roots, so a session's single
     * DirKey bought either stream-fresh fact stats or full dim coverage —
@@ -306,7 +278,7 @@ object StreamServe {
   }
 
   def ensureUnifiedStats(s: SparkSession, dir: String): String = {
-    val root = unifiedStatsRoot(dir)
+    val root = StatsStore.fixtureRoot("graft_stats_unified", dir)
     root.intern.synchronized {
       // content-validated build check: a generation from an older layout
       // (no streamed histogram / span catalog / fan-out yet) triggers a

@@ -133,10 +133,7 @@ object Vectors {
     * shipping state through the session; lives under the JVM temp dir —
     * the fixture directories themselves are read-only.
     */
-  def ivfIndexDir(dir: String): String = {
-    val tag = new java.io.File(dir).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
-    new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_ivf_index/$tag").getAbsolutePath
-  }
+  def ivfIndexDir(dir: String): String = StatsStore.fixtureRoot("graft_ivf_index", dir)
 
   /** Materialize the trained IVF index AS TABLES: `centroids` (cluster,
     * cv — k×64 doubles, one small file) and `codes` (vec_id, label, v,

@@ -3,7 +3,7 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** `SparkContext.listenerBus` is `private[spark]`; job-count
-  * instrumentation (Bench's bench_jobs.json, Probe, the PlanAuditSpec
+  * instrumentation (Bench's bench_jobs.json, `Dev probe`, the PlanAuditSpec
   * planning-time pins) needs to DRAIN it before sampling a listener's
   * counter — onJobStart events are delivered asynchronously, so a count
   * read immediately after an action can attribute a late-delivered job to

@@ -14,6 +14,15 @@ class GenerationStoreSpec extends AnyFunSuite {
   private def freshRoot(): String =
     queries.StatsStore.scratchDir("graft_genstore") + "/store"
 
+  test("fixture store roots keep the <tmpdir>/<kind>/<sanitized dir> layout") {
+    // stores persist across JVMs and are found again by this path alone
+    val tmp = System.getProperty("java.io.tmpdir")
+    assert(queries.StatsStore.fixtureRoot("graft_stats", "/data/fixtures/sf0.1") ==
+      new java.io.File(tmp, "graft_stats/_data_fixtures_sf0.1").getAbsolutePath)
+    assert(queries.Vectors.ivfIndexDir("/a b/c+d") ==
+      new java.io.File(tmp, "graft_ivf_index/_a_b_c_d").getAbsolutePath)
+  }
+
   test("publish → latest; incomplete generations are invisible") {
     val root = freshRoot()
     assert(IndexStore.latestGen(root).isEmpty)

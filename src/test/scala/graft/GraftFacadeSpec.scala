@@ -291,7 +291,7 @@ class GraftFacadeSpec extends AnyFunSuite {
     val s = spark.newSession()
     Graft.enableRuleDiagnostics(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
     val dim = Tables.orders(s, dir).groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_prio"))

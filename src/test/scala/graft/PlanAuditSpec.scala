@@ -228,7 +228,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // pruning has something to skip: the catalog holds more day partitions
     // than the 3 the dimension filter keeps (and the query returns exactly 3)
     val parts = new java.io.File(
-        s"${queries.Advanced.dppDirFor(dir)}/events_by_day").listFiles()
+        s"${queries.StatsStore.fixtureRoot("graft_dpp", dir)}/events_by_day").listFiles()
       .count(_.getName.startsWith("d="))
     assert(parts > 3, s"fixture produced only $parts day partitions")
     assert(df.count() === 3)
@@ -296,7 +296,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     // 8 KB: the HLL small-set floor (~45–49) × ~44 B row width ≈ 2.2 KB
     // must clear the rule's threshold/2 safety margin (ADVICE r11) while
     // the orders scan's static estimate stays well over the threshold
@@ -342,7 +342,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     val sCat = spark.newSession()
     graft.plans.RangeJoinRewrite.ensure(sCat)
-    val store = queries.StatsStore.ensureStatsFor(sCat, dir)
+    val store = queries.StatsStore.ensureStats(sCat, dir)
     sCat.conf.set(graft.plans.StatsCatalog.DirKey, store)
     val winsPath = s"${graft.plans.StatsCatalog.resolveBase(store)}/windows.parquet"
     // warm the catalog memo (one bounded read) BEFORE the measured planning
@@ -468,7 +468,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
     def q() = {
       val dim = Tables.orders(s, dir).groupBy("o_orderpriority")
@@ -595,7 +595,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
     val ev = Tables.events(s, dir).select(col("user_id"), col("value"))
@@ -620,7 +620,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
     val ev = Tables.events(s, dir).select(col("user_id"), col("value"))
     val o2 = Tables.orders(s, dir).filter(col("o_custkey") === 500L)
@@ -650,7 +650,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     val posBottom = bottomJoinRightTables(q(sPos))
     assert(posBottom.contains("customer") && !posBottom.contains("events"),
       s"stats present but the reducing dim was not commuted below the expanding one: $posBottom")
@@ -751,7 +751,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     val posBottom = bottomJoinRightTables(q(sPos))
     assert(posBottom.contains("orders") && !posBottom.contains("events"),
       s"histogram did not price the range-filtered dim into the commute: $posBottom")
@@ -799,7 +799,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     assert(aggBelowJoin(q(sPos)),
       s"no partial aggregate below the join:\n${q(sPos).queryExecution.optimizedPlan}")
     val sNeg = spark.newSession()
@@ -844,7 +844,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     assert(partialBelowLeftJoin(q(sPos)),
       s"no partial below the preserved-side LEFT join:\n${q(sPos).queryExecution.optimizedPlan}")
     // a fact on the NULL-SUPPLYING side must bail: the mirrored RIGHT
@@ -890,7 +890,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     val posTop = q(sPos).queryExecution.optimizedPlan.collect { case j: LJoin => j }.head
     assert(tablesOf(posTop.right) == Seq("lineitem"),
       s"rotation did not land the expanding join last: right=${tablesOf(posTop.right)}")
@@ -968,7 +968,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     graft.plans.SketchStats.ensure(s2)
     s2.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s2, dir))
+      queries.StatsStore.ensureStats(s2, dir))
     val cust = Tables.customer(s2, dir).select(col("c_custkey"), col("c_mktsegment"))
     val o = Tables.orders(s2, dir).select(col("o_orderkey"), col("o_custkey"))
     val li = Tables.lineitem(s2, dir).select(col("l_orderkey"), col("l_quantity"))
@@ -1015,7 +1015,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     assert(compositePartial(q(sPos)),
       s"no composite-key partial below the join:\n${q(sPos).queryExecution.optimizedPlan}")
     val sNeg = spark.newSession()
@@ -1050,7 +1050,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     assert(belowBottom(q(sPos)),
       s"the partial did not land below the bottom join:\n${q(sPos).queryExecution.optimizedPlan}")
     val sNeg = spark.newSession()
@@ -1185,7 +1185,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "16384")
     val pPos = q(sPos).queryExecution.executedPlan.toString
     assert(pPos.contains("BroadcastHashJoin") && !pPos.contains("SortMergeJoin"),
@@ -1238,7 +1238,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     // keep the session threshold tiny so ONLY the hint can justify the
     // broadcast — proving the hint survived, not a size estimate
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
@@ -1294,7 +1294,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val sPos = spark.newSession()
     graft.plans.SketchStats.ensure(sPos)
     sPos.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(sPos, dir))
+      queries.StatsStore.ensureStats(sPos, dir))
     sPos.conf.set("spark.sql.autoBroadcastJoinThreshold", "1048576")
     val pPos = q(sPos).queryExecution.executedPlan.toString
     assert(!pPos.contains("BroadcastHashJoin"),
@@ -1390,7 +1390,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     val s = spark.newSession()
     graft.plans.RangeJoinRewrite.ensure(s)
-    val store = queries.StatsStore.ensureStatsFor(s, dir)
+    val store = queries.StatsStore.ensureStats(s, dir)
     s.conf.set(graft.plans.StatsCatalog.DirKey, store)
     // warm the catalog memo (one bounded read) BEFORE the measured planning
     assert(graft.plans.StatsCatalog.spans(s, store).contains(("scd2", "vf", "vt1")),
@@ -1601,7 +1601,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     val joins = tower(s, hintMid = false).queryExecution.optimizedPlan
       .collect { case j: LJoin => j }
     // fully left-deep fixed point: every join's RIGHT side is a leaf, in
@@ -1662,7 +1662,7 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.plans.SketchStats.ensure(s)
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
-    s.conf.set(graft.plans.SketchStats.DirKey, queries.StatsStore.ensureStatsFor(s, dir))
+    s.conf.set(graft.plans.SketchStats.DirKey, queries.StatsStore.ensureStats(s, dir))
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
     val dim = Tables.orders(s, dir).groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_prio"))
@@ -1687,7 +1687,7 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "8192")
     val fact = Tables.orders(s, dir)
       .select(col("o_orderpriority"), col("o_orderstatus"), col("o_orderkey"))
@@ -1740,7 +1740,7 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
     val ev = Tables.events(s, dir).select(col("user_id"), col("value"))
     val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
@@ -2031,7 +2031,7 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.plans.RuleDiag.clear(s)
     s.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
     val ev = Tables.events(s, dir).select(col("user_id"), col("value"))
     val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
@@ -2081,7 +2081,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     s.conf.set(graft.plans.SketchStats.DirKey,
-      queries.StatsStore.ensureStatsFor(s, dir))
+      queries.StatsStore.ensureStats(s, dir))
     assert(partialBelowSemi(q(s)),
       "the catalog-priced partial should land below the semi join")
     val sNeg = spark.newSession()

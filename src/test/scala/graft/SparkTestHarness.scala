@@ -3,24 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark boot is ~5 s; suites
-  * reuse it). Mirrors the Verify/Bench session configs exactly.
+  * reuse it), built by [[Sessions.local]] — the Verify/Bench settings —
+  * at 4 cores.
   */
 object SparkTestHarness {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // continuous assurance for the partitioning-claim contract: every
-      // claimed checkpoint cut ANY suite drives re-hashes a per-partition
-      // sample through the claim's own partitionIdExpression (ADVICE r12)
-      // — an unsound claim fails its suite loudly instead of mis-joining
-      .config("graft.checkpoint.validateClaim", "true")
-      .getOrCreate()
+    // continuous assurance for the partitioning-claim contract: every
+    // claimed checkpoint cut ANY suite drives re-hashes a per-partition
+    // sample through the claim's own partitionIdExpression (ADVICE r12)
+    // — an unsound claim fails its suite loudly instead of mis-joining
+    val s = Sessions.local(4, "graft.checkpoint.validateClaim" -> "true")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -352,7 +352,7 @@ class StreamingSpec extends AnyFunSuite {
     // transformWithState build, generation-versioned parquet publish) must
     // land registers identical to a from-scratch batch build, so q278's
     // serving layer reads provably-exact state, not merely plausible state.
-    val root = graft.queries.StreamServe.hdrStoreRoot(dir)
+    val root = graft.queries.StatsStore.fixtureRoot("graft_stream_regs", dir)
     val gen = graft.queries.StreamServe.ensureStreamedHdr(spark, dir)
     // the publish is complete and manifest-pointed (a torn publish would
     // be invisible to latestPath and fail this)

@@ -16,12 +16,12 @@ class SummaryRoutingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestHarness.spark.newSession()
   private val dir = SparkTestHarness.Sf0001
 
-  private def withSummary[A](body: (String, String) => A): A = {
+  private def withSummary[A](sub: String = "summary")(body: (String, String) => A): A = {
     SummaryRouting.clear(spark)
     val tmp = new java.io.File(queries.StatsStore.scratchDir("graft_mv"))
     val basePath = s"$dir/events.parquet"
     try {
-      val sumPath = new java.io.File(tmp, "summary").getAbsolutePath
+      val sumPath = new java.io.File(tmp, sub).getAbsolutePath
       spark.read.parquet(basePath).groupBy("event_type")
         .agg(count(lit(1)).as("cnt"), sum("user_id").as("sum_uid"))
         .write.mode("overwrite").parquet(sumPath)
@@ -44,7 +44,7 @@ class SummaryRoutingSpec extends AnyFunSuite {
     val expected = spark.read.parquet(s"$dir/events.parquet").groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("user_id").as("su"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    withSummary { (basePath, sumPath) =>
+    withSummary() { (basePath, sumPath) =>
       val q = spark.read.parquet(basePath).groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("user_id").as("su"))
       val p = q.queryExecution.executedPlan.toString
@@ -54,8 +54,26 @@ class SummaryRoutingSpec extends AnyFunSuite {
     }
   }
 
+  test("scansUnder finds a summary whose path is longer than the plan-string limit") {
+    // plan strings abbreviate file locations past
+    // spark.sql.maxMetadataStringLength (100), so a text search of the
+    // plan cannot see a long scratch path; the root-path check can
+    withSummary("s" * 120 + "/summary") { (basePath, sumPath) =>
+      assert(sumPath.length > 100)
+      val routed = spark.read.parquet(basePath).groupBy("event_type")
+        .agg(count(lit(1)).as("n"))
+      assert(!routed.queryExecution.executedPlan.toString.contains(sumPath),
+        "the plan string no longer abbreviates long paths; this case tests nothing")
+      assert(SummaryRouting.scansUnder(routed, sumPath))
+      assert(!SummaryRouting.scansUnder(routed, basePath))
+      val unrouted = spark.read.parquet(basePath).filter(col("user_id") > 5)
+        .groupBy("event_type").agg(count(lit(1)).as("n"))
+      assert(!SummaryRouting.scansUnder(unrouted, sumPath))
+    }
+  }
+
   test("a filtered aggregate is NOT routed (a total rollup cannot answer it)") {
-    withSummary { (basePath, _) =>
+    withSummary() { (basePath, _) =>
       val q = spark.read.parquet(basePath)
         .filter(col("user_id") > 5).groupBy("event_type")
         .agg(count(lit(1)).as("n"))
@@ -64,7 +82,7 @@ class SummaryRoutingSpec extends AnyFunSuite {
   }
 
   test("a different grouping or an uncovered aggregate is NOT routed") {
-    withSummary { (basePath, _) =>
+    withSummary() { (basePath, _) =>
       val g = spark.read.parquet(basePath).groupBy("event_type", "user_id")
         .agg(count(lit(1)).as("n"))
       assert(g.queryExecution.executedPlan.toString.contains("events.parquet"))
@@ -80,7 +98,7 @@ class SummaryRoutingSpec extends AnyFunSuite {
   test("routing decisions land in the diagnostics buffer with reasons") {
     // the MV operator question — "why didn't my query hit the summary" —
     // answered by the same RuleDiag surface as the stats consumers
-    withSummary { (basePath, _) =>
+    withSummary() { (basePath, _) =>
       graft.plans.RuleDiag.clear(spark)
       spark.conf.set(graft.plans.RuleDiag.EnabledKey, "true")
       try {
