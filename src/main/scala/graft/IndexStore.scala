@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentHashMap
 
 /** Generation-versioned index store (VERDICT r10 item 5): the persisted
   * ANN artifacts were overwrite-in-place, so a probe racing a rebuild
@@ -21,16 +20,14 @@ import java.util.concurrent.ConcurrentHashMap
   *     current one plus the one a long probe may still be pinned to,
   *     q243's history-retention discipline applied to indexes) and
   *     deletes older ones after every publish;
-  *   - in-JVM builds are serialized per root (interned lock — ADVICE
-  *     r10), and a cross-JVM publish race is benign: each builder stages
-  *     under a unique nonce, and whoever renames `gen=<n>` first wins —
-  *     the loser republishes as n+1.
+  *   - in-JVM builds are serialized per root on `root.intern` (ADVICE
+  *     r10) — the lock the stats and stream writers already hold around
+  *     their read-modify-publish, so nesting the two is reentrant;
+  *   - a cross-JVM publish race is benign: each builder stages under a
+  *     unique nonce, and whoever renames `gen=<n>` first wins — the
+  *     loser republishes as n+1.
   */
 object IndexStore {
-  private val locks = new ConcurrentHashMap[String, Object]()
-  private def lockFor(root: String): Object =
-    locks.computeIfAbsent(root, _ => new Object)
-
   def genPath(root: String, id: Long): String = s"$root/gen=$id"
 
   /** Generation id of a published path (`.../gen=<n>`). */
@@ -73,16 +70,16 @@ object IndexStore {
     * path is gone (ADVICE r12: previously a dangling memo hard-failed
     * every subsequent probe until JVM restart); long-lived multi-JVM
     * readers that need the NEWEST generation resolve via [[latestPath]]. */
-  private val resolved = new ConcurrentHashMap[String, String]()
+  private val resolved = new Cache[String, String](Cache.DefaultMax)
 
   def latestPathCached(root: String): Option[String] =
-    Option(resolved.get(root))
+    resolved.get(root)
       .filter(p => Files.exists(Paths.get(p, "_GRAFT_COMPLETE")))
       .orElse {
         val p = latestPath(root)
         p match {
           case Some(v) => resolved.put(root, v)
-          case None => resolved.remove(root)
+          case None => resolved.removeWhere(_ == root)
         }
         p
       }
@@ -95,7 +92,7 @@ object IndexStore {
     // judged queries publish scratch generations inside their timed bodies,
     // and Bench reports the build/consume split per query. Nesting-safe —
     // a query-level meter span subsumes this one.
-    LifecycleMeter.time { lockFor(root).synchronized {
+    LifecycleMeter.time { root.intern.synchronized {
       Files.createDirectories(Paths.get(root))
       var id = latestGen(root).getOrElse(0L) + 1
       val nonce = java.util.UUID.randomUUID().toString.take(8)

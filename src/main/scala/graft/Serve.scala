@@ -2,7 +2,7 @@ package graft
 
 import java.net.InetSocketAddress
 
-import com.sun.net.httpserver.HttpServer
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc HTTP query endpoint — the SERVING half of the reference's shape
@@ -53,6 +53,22 @@ object Serve {
       case c => c.toString
     } + "\""
 
+  private def reply(exchange: HttpExchange, status: Int, contentType: String,
+      bytes: Array[Byte]): Unit = {
+    exchange.getResponseHeaders.set("Content-Type", contentType)
+    exchange.sendResponseHeaders(status, bytes.length.toLong)
+    exchange.getResponseBody.write(bytes)
+  }
+
+  /** 200 with one JSON document per line. */
+  private def jsonl(exchange: HttpExchange, rows: Iterable[String]): Unit =
+    reply(exchange, 200, "application/x-ndjson", (rows.mkString("\n") + "\n").getBytes("UTF-8"))
+
+  /** `status` with a `{"error": message}` body. */
+  private def error(exchange: HttpExchange, status: Int, message: String): Unit =
+    reply(exchange, status, "application/json",
+      s"""{"error":${jsonQuote(message)}}""".getBytes("UTF-8"))
+
   /** Start serving `spark`'s SQL surface on 127.0.0.1:`port` (0 = pick a
     * free port). The caller owns the lifecycle via [[Running.stop]].
     */
@@ -69,19 +85,8 @@ object Serve {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           s"serve-${Thread.currentThread().getId}")
         val sqlText = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
-        try {
-          val rows = spark.sql(sqlText).limit(maxRows).toJSON.collect()
-          val bytes = (rows.mkString("\n") + "\n").getBytes("UTF-8")
-          exchange.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-          exchange.sendResponseHeaders(200, bytes.length.toLong)
-          exchange.getResponseBody.write(bytes)
-        } catch {
-          case e: Throwable =>
-            val bytes = s"""{"error":${jsonQuote(e.getMessage)}}""".getBytes("UTF-8")
-            exchange.getResponseHeaders.set("Content-Type", "application/json")
-            exchange.sendResponseHeaders(400, bytes.length.toLong)
-            exchange.getResponseBody.write(bytes)
-        }
+        try jsonl(exchange, spark.sql(sqlText).limit(maxRows).toJSON.collect())
+        catch { case e: Throwable => error(exchange, 400, e.getMessage) }
       } finally exchange.close()
     })
     // optimizer diagnostics over the wire (VERDICT r16 item 8): the
@@ -99,27 +104,13 @@ object Serve {
       // a POST here is a caller confusing the two endpoints, not a query
       try {
         if (exchange.getRequestMethod != "GET") {
-          val bytes = """{"error":"/diag is read-only: use GET"}""".getBytes("UTF-8")
-          exchange.getResponseHeaders.set("Content-Type", "application/json")
           exchange.getResponseHeaders.set("Allow", "GET")
-          exchange.sendResponseHeaders(405, bytes.length.toLong)
-          exchange.getResponseBody.write(bytes)
-        } else try {
-          val rows = graft.plans.RuleDiag.records(spark).map { case (r, d, re, n) =>
+          error(exchange, 405, "/diag is read-only: use GET")
+        } else try jsonl(exchange, graft.plans.RuleDiag.records(spark).map { case (r, d, re, n) =>
             s"""{"rule":${jsonQuote(r)},"decision":${jsonQuote(d)},""" +
               s""""reason":${jsonQuote(re)},"n_plans":$n}"""
-          }
-          val bytes = (rows.mkString("\n") + "\n").getBytes("UTF-8")
-          exchange.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-          exchange.sendResponseHeaders(200, bytes.length.toLong)
-          exchange.getResponseBody.write(bytes)
-        } catch {
-          case e: Throwable =>
-            val bytes = s"""{"error":${jsonQuote(e.getMessage)}}""".getBytes("UTF-8")
-            exchange.getResponseHeaders.set("Content-Type", "application/json")
-            exchange.sendResponseHeaders(500, bytes.length.toLong)
-            exchange.getResponseBody.write(bytes)
-        }
+          })
+        catch { case e: Throwable => error(exchange, 500, e.getMessage) }
       } finally exchange.close()
     })
     server.start()

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
@@ -90,8 +88,7 @@ object RangeJoinRewrite {
     * re-probes instead of reusing stale spans. Collisions or stale entries
     * within the TTL only change the chosen width, never the join's result
     * (residual predicates repair any W > 0). */
-  private val spanCache =
-    new ConcurrentHashMap[(Int, Int, Int), ((Long, Long), Long)]()
+  private val spanCache = new graft.Cache[(Int, Int, Int), ((Long, Long), Long)](128)
   private val SpanTtlNanos = 10L * 60 * 1000 * 1000 * 1000 // 10 min
 
   /** Re-entrancy guard (VERDICT r11 item 3, same lesson as
@@ -109,7 +106,7 @@ object RangeJoinRewrite {
     val key = (child.canonicalized.hashCode(),
       lo.canonicalized.hashCode(), hi.canonicalized.hashCode())
     val now = System.nanoTime()
-    Option(spanCache.get(key)).collect {
+    spanCache.get(key).collect {
       case (v, born) if now - born < SpanTtlNanos => v
     }.orElse {
       probing.set(true)
@@ -124,7 +121,6 @@ object RangeJoinRewrite {
         if (row.isNullAt(0) || row.isNullAt(1)) None
         else {
           val v = (row.getLong(0), row.getLong(1))
-          if (spanCache.size > 128) spanCache.clear()
           spanCache.put(key, (v, now))
           Some(v)
         }

@@ -54,9 +54,6 @@ object SketchStats {
   private[plans] def lookup(spark: SparkSession, dir: String): Map[(String, String), Long] =
     StatsCatalog.ndv(spark, dir)
 
-  /** Reset the memoized stats (tests rebuild stores under the same path). */
-  def invalidate(): Unit = StatsCatalog.invalidate()
-
   /** Sound row upper bound for a grouped side: ∏ NDV(grouping cols),
     * every grouping expr a stats-covered scan column. Filters/projects
     * between the agg and the scan only shrink rows, so the bound holds

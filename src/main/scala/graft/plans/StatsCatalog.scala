@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -45,7 +43,13 @@ object StatsCatalog {
     * Spark jobs); unchanged → re-stamp and keep serving. Only a
     * generation that actually MOVED pays the bounded re-read. */
   private[graft] var TtlNanos = 10L * 60 * 1000 * 1000 * 1000 // test seam
-  private val cache = new ConcurrentHashMap[(String, String), (AnyRef, Long, String)]()
+  /** (kind, dir) → (value, read/revalidation stamp, generation read).
+    * 128 entries, least recently used out first: a TTL-valid hit counts
+    * as a use, so the fixture catalog every planning reads outlives any
+    * churn of scratch-store primes. */
+  private val cache = new graft.Cache[(String, String), (AnyRef, Long, String)](128)
+  private def stamp(key: (String, String), v: AnyRef, base: String): Unit =
+    cache.put(key, (v, System.nanoTime(), base))
   private val loading = new ThreadLocal[Boolean] { override def initialValue = false }
 
   /** The generation-resolved base path for `dir`: the latest complete
@@ -61,7 +65,7 @@ object StatsCatalog {
     if (loading.get()) empty
     else {
       val key = (kind, dir)
-      val hit = Option(cache.get(key))
+      val hit = cache.get(key)
       hit match {
         case Some((v, at, _)) if System.nanoTime() - at < TtlNanos =>
           v.asInstanceOf[T]
@@ -73,7 +77,7 @@ object StatsCatalog {
           val base = resolveBase(dir)
           hit match {
             case Some((v, _, cachedBase)) if cachedBase == base =>
-              cache.put(key, (v, System.nanoTime(), cachedBase))
+              stamp(key, v, cachedBase)
               v.asInstanceOf[T]
             case _ =>
               loading.set(true)
@@ -83,15 +87,7 @@ object StatsCatalog {
                 finally loading.set(false)
               r match {
                 case Some(v) =>
-                  // overflow evicts the OLDEST entries, not the whole map
-                  // (ADVICE r14: a global clear here is the same cross-root
-                  // collateral the per-root invalidate(root) fix killed —
-                  // one hot store's churn would evict every fixture's
-                  // long-lived catalog and re-pay their reads). The evict
-                  // and the put share one lock (ADVICE r15): a snapshot
-                  // taken non-atomically against a racing put could evict
-                  // the entry that put just inserted fresh.
-                  putBounded(key, v, base)
+                  stamp(key, v, base)
                   v
                 case None =>
                   // a refresh that fails keeps serving the stale value
@@ -102,7 +98,7 @@ object StatsCatalog {
                   // stays uncached so the next query retries immediately
                   hit match {
                     case Some((v, _, cachedBase)) =>
-                      cache.put(key, (v, System.nanoTime(), cachedBase))
+                      stamp(key, v, cachedBase)
                       v.asInstanceOf[T]
                     case None => empty
                   }
@@ -111,19 +107,6 @@ object StatsCatalog {
       }
     }
   }
-
-  /** Bounded put shared by the read path and [[prime]]: overflow evicts
-    * the OLDEST entries, never the whole map (ADVICE r14), and the evict
-    * and the put share one lock (ADVICE r15). */
-  private def putBounded(key: (String, String), v: AnyRef, base: String): Unit =
-    cache.synchronized {
-      if (cache.size > 128) {
-        import scala.jdk.CollectionConverters._
-        cache.entrySet().asScala.toSeq.sortBy(_.getValue._2)
-          .take(cache.size - 96).foreach(e => cache.remove(e.getKey))
-      }
-      cache.put(key, (v, System.nanoTime(), base))
-    }
 
   /** PRIME the memo for `dir` from driver-side content the publisher
     * already holds (round 20, guide §1.2 "don't recompute what you just
@@ -138,7 +121,7 @@ object StatsCatalog {
     * describes, so the TTL-expiry revalidation and foreign-publish
     * detection behave exactly as for read-backed entries. */
   def prime(dir: String, base: String, values: Map[String, AnyRef]): Unit =
-    values.foreach { case (kind, v) => putBounded((kind, dir), v, base) }
+    values.foreach { case (kind, v) => stamp((kind, dir), v, base) }
 
   /** Test seam (Round20Spec): drop `dir`'s entries and re-read every
     * kind from parquet, returning the maps a cold reader computes. */
@@ -155,14 +138,12 @@ object StatsCatalog {
   }
 
   /** Snapshot of `dir`'s currently memoized kinds (test seam). */
-  private[graft] def memoSnapshot(dir: String): Map[String, AnyRef] = {
-    import scala.jdk.CollectionConverters._
-    cache.asScala.collect { case ((kind, d), (v, _, _)) if d == dir => kind -> v }.toMap
-  }
+  private[graft] def memoSnapshot(dir: String): Map[String, AnyRef] =
+    cache.entries.collect { case ((kind, d), (v, _, _)) if d == dir => kind -> v }.toMap
 
   /** Drop every memoized table (tests rebuild stores under the same path;
     * StatsStore publishes call this so fresh generations are picked up). */
-  def invalidate(): Unit = cache.clear()
+  def invalidate(): Unit = { cache.removeWhere(_ => true); () }
 
   /** Drop ONLY one root's memoized tables — what a publish into that root
     * actually stales. A global clear here let every q287-style scratch
@@ -170,7 +151,7 @@ object StatsCatalog {
     * plannings re-paid their reads (the bench's warm-pass job counts
     * showed it: q274 15 jobs vs 7 with the memo intact). */
   def invalidate(root: String): Unit = {
-    cache.keySet.removeIf(_._2 == root); ()
+    cache.removeWhere(_._2 == root); ()
   }
 
   /** Table name of a file scan, from its root path (the convention the

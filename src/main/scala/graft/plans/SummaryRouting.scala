@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
@@ -40,7 +38,8 @@ object SummaryRouting {
   final case class Summary(groupCols: Seq[String], plan: LogicalPlan,
       countCol: Option[String], sums: Map[String, String])
 
-  private val reg = new ConcurrentHashMap[(SparkSession, String), Summary]()
+  private val reg = new graft.Cache[(SparkSession, String), Summary](
+    graft.Cache.DefaultMax, stale = k => graft.Cache.stopped(k._1))
 
   /** Register `summary` (one row per group, exact totals) for aggregates
     * over the base relation whose file path ends with `basePathSuffix`.
@@ -58,7 +57,7 @@ object SummaryRouting {
 
   /** Drop every registration for the session (tests; bounded sessions). */
   def clear(spark: SparkSession): Unit = {
-    reg.keySet.removeIf(_._1 eq spark)
+    reg.removeWhere(_._1 eq spark)
     ()
   }
 
@@ -93,10 +92,9 @@ object SummaryRouting {
     private def summaryFor(rel: LogicalRelation): Option[Summary] =
       rel.relation match {
         case fs: HadoopFsRelation =>
-          import scala.jdk.CollectionConverters._
-          reg.entrySet().asScala.collectFirst {
-            case e if (e.getKey._1 eq spark) &&
-              fs.location.rootPaths.exists(_.toString.endsWith(e.getKey._2)) => e.getValue
+          reg.entries.collectFirst {
+            case ((s, suffix), summary) if (s eq spark) &&
+              fs.location.rootPaths.exists(_.toString.endsWith(suffix)) => summary
           }
         case _ => None
       }

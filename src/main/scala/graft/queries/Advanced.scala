@@ -1126,8 +1126,11 @@ object Advanced {
         .orderBy("d")
     })
 
-  private val dppBuilt =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+  /** Built q266 catalogs, keyed by path like StatsStore's fixture
+    * stores: one single-flight build per JVM, so concurrent Serve requests
+    * (any session) never overwrite the catalog under another's scan
+    * (ADVICE r10). */
+  private val dppBuilt = new graft.Cache[String, String](graft.Cache.DefaultMax)
   /** Deterministic per-fixture home of the q266 partitioned catalog:
     * `events_by_day` (fact, PARTITIONED BY the DATE column d) and `days`
     * (scan-backed day dimension with a precomputed top-3-busiest flag —
@@ -1136,24 +1139,17 @@ object Advanced {
     */
   private[graft] def ensureDppCatalog(s: SparkSession, dir: String): String = {
     val p = StatsStore.fixtureRoot("graft_dpp", dir)
-    dppBuilt.removeIf(k => k._1.sparkContext.isStopped)
-    // serialize builds per target path (ADVICE r10): with Serve executing
-    // requests concurrently, two SESSIONS can miss each other's (session,
-    // dir) memo and overwrite the catalog under a third's scan
-    p.intern.synchronized {
-      if (!dppBuilt.contains((s, dir))) {
-        val ev = Tables.events(s, dir).withColumn("d", to_date(col("ts")))
-        ev.write.mode("overwrite").partitionBy("d").parquet(s"$p/events_by_day")
-        val daily = ev.groupBy("d").agg(count(lit(1)).as("n_day"))
-        // the day domain is tiny (one row per day) — the unpartitioned
-        // global window is bounded by design, like the q19 register walk
-        val w = Window.orderBy(desc("n_day"), col("d"))
-        daily.withColumn("busy", (row_number().over(w) <= 3).cast("int"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$p/days")
-        dppBuilt.add((s, dir))
-      }
+    dppBuilt.getOrBuild(p) {
+      val ev = Tables.events(s, dir).withColumn("d", to_date(col("ts")))
+      ev.write.mode("overwrite").partitionBy("d").parquet(s"$p/events_by_day")
+      val daily = ev.groupBy("d").agg(count(lit(1)).as("n_day"))
+      // the day domain is tiny (one row per day) — the unpartitioned
+      // global window is bounded by design, like the q19 register walk
+      val w = Window.orderBy(desc("n_day"), col("d"))
+      daily.withColumn("busy", (row_number().over(w) <= 3).cast("int"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$p/days")
+      p
     }
-    p
   }
 
   /** l_extendedprice in integer cents per returnflag — the HDR sketch's

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -27,55 +25,35 @@ private[graft] object Memo {
     */
   private final case class Entry(df: DataFrame, persisted: Boolean)
 
-  private val memo = new ConcurrentHashMap[(SparkSession, String, String), Entry]()
+  private def release(e: Entry): Unit =
+    if (e.persisted)
+      try e.df.unpersist(blocking = false)
+      catch { case _: Throwable => () } // stopped context: blocks already gone
+
+  /** Keyed (session, dir, kind). Builds nest (the pair frame's build calls
+    * the shingle frame) and run single-flight, so concurrent first readers
+    * share one materialization and one persist — no loser frame whose
+    * unpersist could drop the winner's plan-identical CacheManager entry
+    * (ADVICE r4). Stopped sessions' entries drop on insert (their blocks
+    * died with the context); an LRU eviction releases like [[evict]]. */
+  private val memo = new graft.Cache[(SparkSession, String, String), Entry](
+    graft.Cache.DefaultMax, stale = k => graft.Cache.stopped(k._1), onEvict = release)
 
   /** Memoized materialization of `build` under (session, dir, kind). The
     * `local` flag picks the strategy; callers outside tests pass
-    * `sparkContext.isLocal`.
-    *
-    * Deliberately get-then-putIfAbsent, NOT computeIfAbsent: builds nest
-    * (the pair frame's build calls the shingle frame), and a nested
-    * insert from inside a computeIfAbsent mapping function throws
-    * ConcurrentHashMap's "Recursive update" — flakily, since detection
-    * depends on the two keys' hash-bin collision. The race cost of the
-    * non-atomic form is a duplicate materialization, and the loser's
-    * persist is released below.
-    */
+    * `sparkContext.isLocal`. The persist happens inside the build, so an
+    * entry visible in the memo is always already persisted and [[evict]]
+    * can never race ahead of it. */
   def cached(kind: String, s: SparkSession, dir: String, local: Boolean)(
-      build: => DataFrame): DataFrame = {
-    // entries for stopped sessions are dead weight — drop before insert
-    // (their blocks died with the context; nothing to unpersist)
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, dir, kind)
-    val hit = memo.get(key)
-    if (hit != null) return hit.df
-    val raw = build
-    val entry =
+      build: => DataFrame): DataFrame =
+    memo.getOrBuild((s, dir, kind)) {
+      val raw = build
       if (local) Entry(raw.localCheckpoint(), persisted = false)
       else { raw.persist(StorageLevel.MEMORY_AND_DISK); Entry(raw, persisted = true) }
-    val prev = memo.putIfAbsent(key, entry)
-    // On a lost race the loser does NOTHING (ADVICE r4): CacheManager keys
-    // caches by canonicalized plan, so the loser's unpersist of its
-    // plan-identical frame would silently drop the winner's cache too.
-    // And since plan-identical persists share ONE CacheManager entry, the
-    // loser's persist is not a leak: evict's single unpersist releases it.
-    // Persisting BEFORE the insert (not after winning) keeps evict correct
-    // under concurrency — an entry visible in the map is always already
-    // persisted, so evict can never race ahead of the winner's persist and
-    // strand unreleasable blocks.
-    if (prev == null) entry.df else prev.df
-  }
+    }.df
 
   def memoized(kind: String, s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
     cached(kind, s, dir, s.sparkContext.isLocal)(build)
-
-  /** Per-(session, dir, kind) build locks for [[parquetBacked]] — the
-    * interned-lock discipline [[graft.IndexStore]] uses (round 20, VERDICT
-    * r19 item 6 / carried from r18: two concurrent first readers both paid
-    * the build and the loser's scratch dir was abandoned to the exit
-    * hook). computeIfAbsent on a lock OBJECT is safe here — unlike the
-    * frame memo, lock creation never nests a build. */
-  private val buildLocks = new ConcurrentHashMap[(SparkSession, String, String), Object]()
 
   /** Parquet-backed memoization (VERDICT r17 item 2 / what's-wrong 3):
     * build once per (session, dir, kind), WRITE the result to a
@@ -87,9 +65,7 @@ private[graft] object Memo {
     * recompute costs ~50× its read). The build is metered as store-build
     * time: the artifact IS a persisted derived store, and the bench's
     * lifecycle split should account it like one. Concurrent first readers
-    * serialize on an interned per-key lock (round 20): exactly ONE build
-    * runs, the rest see the winner's entry on re-check — MemoSpec drives
-    * two concurrent first readers and meters one build. */
+    * share one build (Round20Spec meters it). */
   def parquetBacked(kind: String, s: SparkSession, dir: String)(
       build: => DataFrame): DataFrame = {
     // the scratch dir is DRIVER-local: on a cluster, executors could
@@ -98,40 +74,20 @@ private[graft] object Memo {
     // executor disk — the same posture cached() documents); the parquet
     // backing is the local-mode (bench/verify) eviction armor
     if (!s.sparkContext.isLocal) return cached(kind, s, dir, local = false)(build)
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val key = (s, dir, s"pq:$kind")
-    val hit = memo.get(key)
-    if (hit != null) return hit.df
-    buildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val again = memo.get(key) // the lock loser sees the winner's entry
-      if (again != null) again.df
-      else {
-        val path = graft.LifecycleMeter.time {
-          val p = StatsStore.scratchDir(s"graft_memo_$kind") + "/data"
-          build.write.parquet(p)
-          p
-        }
-        val entry = Entry(s.read.parquet(path), persisted = false)
-        val prev = memo.putIfAbsent(key, entry)
-        if (prev == null) entry.df else prev.df
+    memo.getOrBuild((s, dir, s"pq:$kind")) {
+      val path = graft.LifecycleMeter.time {
+        val p = StatsStore.scratchDir(s"graft_memo_$kind") + "/data"
+        build.write.parquet(p)
+        p
       }
-    }
+      Entry(s.read.parquet(path), persisted = false)
+    }.df
   }
 
   /** Unpersist discipline (VERDICT r3 item 9): evicting a (session, dir)
     * releases every cluster-branch persist under it — a long-lived shared
     * session no longer pins MEMORY_AND_DISK blocks forever.
     */
-  def evict(s: SparkSession, dir: String): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == s && e.getKey._2 == dir) {
-        if (e.getValue.persisted)
-          try e.getValue.df.unpersist(blocking = false)
-          catch { case _: Throwable => () } // stopped context: blocks already gone
-        it.remove()
-      }
-    }
-  }
+  def evict(s: SparkSession, dir: String): Unit =
+    memo.removeWhere(k => k._1 == s && k._2 == dir).foreach(release)
 }

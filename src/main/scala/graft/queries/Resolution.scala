@@ -162,23 +162,19 @@ object Resolution {
     * dominant shared cost, so it runs once per (session, dir).
     */
   /** Max BFS depth of the memoized reach frame, one bounded probe per
-    * (session, fixture) — stopped-session keys dropped like Memo's (the
-    * removeIf runs at every probe, see [[reachDepth]]; without it the memo
-    * strongly retains stopped sessions forever — ADVICE r14). */
-  private val reachDepthMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
+    * (session, fixture). */
+  private val reachDepthMemo = new graft.Cache[(SparkSession, String), Int](
+    graft.Cache.DefaultMax, stale = k => graft.Cache.stopped(k._1))
 
   /** Memoized max depth of `reach`; 0 for an EMPTY reach relation (the
     * max(depth) row is null then — ADVICE r14: the raw getAs.intValue
     * NPE'd upstream of the Stress.run empty-frame handling). */
   private def reachDepth(s: SparkSession, dir: String,
-      reach: DataFrame): Int = {
-    reachDepthMemo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    reachDepthMemo.computeIfAbsent((s, dir), _ => {
+      reach: DataFrame): Int =
+    reachDepthMemo.getOrBuild((s, dir)) {
       val row = reach.agg(max("depth")).head()
       if (row.isNullAt(0)) 0 else row.getAs[Number](0).intValue()
-    }).intValue()
-  }
+    }
 
   private[queries] def reachAllFrame(s: SparkSession, dir: String): DataFrame =
     Memo.memoized("reach_all", s, dir) {

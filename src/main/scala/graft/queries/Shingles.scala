@@ -37,7 +37,4 @@ object Shingles {
     */
   private[graft] def pairsFrame(s: SparkSession, dir: String)(build: => DataFrame): DataFrame =
     Memo.memoized("pairs", s, dir)(build)
-
-  /** Release every memoized frame for (session, dir) — see [[Memo.evict]]. */
-  def evict(s: SparkSession, dir: String): Unit = Memo.evict(s, dir)
 }

@@ -116,16 +116,14 @@ object Vectors {
     * (session, dir) like the assignment frame; the fit is 3 tiny jobs but
     * two judged queries and the probe path all need the same codebook.
     */
-  private val kmCentCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[IndexedSeq[Double]]]()
-  private def kmCentroids(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Double]] = {
-    // entries for stopped sessions are dead weight — drop before insert
-    // (Memo.cached's discipline; the values are plain driver arrays, so
-    // there is nothing to unpersist)
-    kmCentCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    kmCentCache.computeIfAbsent((s, dir),
-      _ => graft.operators.KMeans.fit(vecs(s, dir), kmInit, KmIters))
-  }
+  private val kmCentCache = codebookCache[IndexedSeq[IndexedSeq[Double]]]
+  private def kmCentroids(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Double]] =
+    kmCentCache.getOrBuild((s, dir))(graft.operators.KMeans.fit(vecs(s, dir), kmInit, KmIters))
+
+  /** Per-(session, dir) memo of driver-side codebooks (plain arrays —
+    * nothing to release on eviction). */
+  private def codebookCache[V] = new graft.Cache[(SparkSession, String), V](
+    graft.Cache.DefaultMax, stale = k => graft.Cache.stopped(k._1))
 
   /** Filesystem home of the persisted IVF index for a fixture dir
     * (train-once → serve-many; q262/q263). Deterministic per fixture, so
@@ -247,17 +245,14 @@ object Vectors {
     * dir) like [[kmCentroids]]: each subspace's fit is PqIters tiny jobs
     * over the 16-dim slices.
     */
-  private val pqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]()
-  private def pqCodebooks(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    pqCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    pqCbCache.computeIfAbsent((s, dir), _ => (0 until PqM).map { m =>
+  private val pqCbCache = codebookCache[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
+  private def pqCodebooks(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    pqCbCache.getOrBuild((s, dir))((0 until PqM).map { m =>
       graft.operators.KMeans.fit(
         vecs(s, dir).select(col("vec_id"),
           slice(col("v"), m * PqDims + 1, PqDims).as("v")),
         pqInit(m), PqIters)
     })
-  }
 
   /** PQ-encoded corpus: (vec_id, label, v, nsq, code0..code3) — each code
     * is the 1-based argmin-distance codeword of the vector's m-th 16-dim
@@ -296,17 +291,14 @@ object Vectors {
         zip_with(col("v"), element_at(centArr, col("cluster")), (a, b) => a - b))
     }
 
-  private val rpqCbCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]()
-  private def rpqCodebooks(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    rpqCbCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    rpqCbCache.computeIfAbsent((s, dir), _ => (0 until PqM).map { m =>
+  private val rpqCbCache = codebookCache[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
+  private def rpqCodebooks(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    rpqCbCache.getOrBuild((s, dir))((0 until PqM).map { m =>
       graft.operators.KMeans.fit(
         residFrame(s, dir).select(col("vec_id"),
           slice(col("rv"), m * PqDims + 1, PqDims).as("v")),
         rpqInit(m), PqIters)
     })
-  }
 
   /** Residual-encoded corpus: (…, cluster, rcode0..rcode3). */
   private def rpqEncFrame(s: SparkSession, dir: String): DataFrame =
