@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Persisted per-column NDV sketch statistics + the rule that consumes
   * them (VERDICT r10 item 3 — "close the statistics→plan loop").
@@ -147,7 +147,7 @@ object StatsStore {
     // guide §2.6: the scans are independent and each is a single driver
     // job — running them back to back serialized their job latencies);
     // results re-assemble in input order so the written rows are stable
-    val perTable = inParallel(tables.map { case (tbl, cols) => () =>
+    val perTable = Par.all(tables.map { case (tbl, cols) => () =>
       val df = resolve(tbl)
       val (arr, scal) = cols.partition(c =>
         df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
@@ -178,11 +178,11 @@ object StatsStore {
     * distinct values would single-partition a row-count-scaled relation.
     * Production constant; specs lower it through [[withCaps]] (ADVICE r17:
     * the previous mutable-var seam broke under parallel test execution and
-    * weakened the "hard cap" contract — the DynamicVariable scope is
-    * thread-local, so a spec's lowered cap can never leak into a
-    * concurrently-running suite). */
+    * weakened the "hard cap" contract — the scope is thread-local, so a
+    * spec's lowered cap can never leak into a concurrently-running suite,
+    * and [[graft.Par]] carries it into every task the spec's call forks). */
   private val HistMaxDomainDefault = 65536L
-  private val histDomainCap = new scala.util.DynamicVariable[Option[Long]](None)
+  private val histDomainCap = new Par.Local[Option[Long]](None)
   private[graft] def HistMaxDomain: Long =
     histDomainCap.value.getOrElse(HistMaxDomainDefault)
 
@@ -234,10 +234,7 @@ object StatsStore {
     // retired distributed walk's by the same argument GenerationStoreSpec
     // pins (ceil(i·n/k) targets over the sorted exact counts). Columns in
     // parallel (guide §2.6).
-    // the cap is a thread-scoped test seam (withCaps) — read it on the
-    // CALLING thread; pool threads never see the DynamicVariable scope
-    val maxDomain = HistMaxDomain
-    val rows: Seq[HistRow] = inParallel(
+    val rows: Seq[HistRow] = Par.all(
       for { (tbl, cols) <- histCols; c <- cols } yield { () =>
         val df = resolve(tbl)
         refuseStringHist(df, tbl, Seq(c))
@@ -245,9 +242,9 @@ object StatsStore {
           // the bounded-domain refusal governs counter-derived boundaries
           // too (the caps are independent seams: a spec-lowered domain cap
           // can sit below the counter carry cap)
-          case Some(m) if m.size > maxDomain =>
+          case Some(m) if m.size > HistMaxDomain =>
             throw new IllegalArgumentException(
-              s"histogram domain for $tbl.$c has more than $maxDomain " +
+              s"histogram domain for $tbl.$c has more than $HistMaxDomain " +
                 "distinct values: the boundary walk would single-partition " +
                 "it — coarsen the column or drop it from hist coverage")
           case Some(m) => boundariesFromCounts(tbl, c, m)
@@ -255,10 +252,10 @@ object StatsStore {
             val dom = histCountDomain(df, c)
             val vc = df.select(dom.as("v")).filter(col("v").isNotNull)
               .groupBy("v").agg(count(lit(1)).as("c"))
-              .limit(maxDomain.toInt + 1).collect()
-            if (vc.length > maxDomain)
+              .limit(HistMaxDomain.toInt + 1).collect()
+            if (vc.length > HistMaxDomain)
               throw new IllegalArgumentException(
-                s"histogram domain for $tbl.$c has more than $maxDomain " +
+                s"histogram domain for $tbl.$c has more than $HistMaxDomain " +
                   "distinct values: the boundary walk would single-partition " +
                   "it — coarsen the column or drop it from hist coverage")
             boundariesFromCounts(tbl, c,
@@ -327,9 +324,8 @@ object StatsStore {
   private def histCountersWhereBounded(s: SparkSession,
       hist: Seq[(String, Seq[String])],
       resolve: String => DataFrame): Seq[CountRow] =
-    // columns concurrently (round 19, §2.6); the inner call is a single
-    // column so it runs inline on the pool thread — never a nested Await
-    inParallel(
+    // columns concurrently (round 19, §2.6)
+    Par.all(
       for { (tbl, cols) <- hist; c <- cols } yield { () =>
         try histCounterRows(s, tbl, resolve(tbl), Seq(c))
         catch { case _: IllegalStateException => Seq.empty[CountRow] }
@@ -382,7 +378,7 @@ object StatsStore {
           writes += (() => resolve(t).coalesce(1).write.parquet(s"$g/$t.parquet"))
         }
       }
-      inParallel(writes.result()); ()
+      Par.all(writes.result()); ()
     }
     // prime the planner catalog from the driver-side rows already in hand
     // (round 20): the first planning against this root runs zero read
@@ -464,7 +460,7 @@ object StatsStore {
       // and the SCD2 validity history — persist beside their span rows
       val wins = windowsFrame(s, dir)
       val scd2 = scd2Frame(s, dir)
-      val spanRows = inParallel(Seq(
+      val spanRows = Par.all(Seq(
           () => spanStatsOf("windows", wins, "ws", "we"),
           () => spanStatsOf("scd2", scd2, "vf", "vt1")))
       val pub = graft.IndexStore.publish(p) { staging =>
@@ -488,7 +484,7 @@ object StatsStore {
         if (counterRows.nonEmpty)
           writes += (() => byteRows.toDF("tbl", "src_bytes")
             .coalesce(1).write.parquet(s"$staging/table_src_bytes"))
-        inParallel(writes.result()); ()
+        Par.all(writes.result()); ()
       }
       // prime the planner catalog (round 20) — the driver rows are in
       // hand; first planning against the fixture store runs zero read
@@ -560,55 +556,6 @@ object StatsStore {
     "column_span", "column_fanout", "column_hist_counts", "table_src_bytes",
     "_GRAFT_COMPLETE", "_GRAFT_BASE", "_GRAFT_CLEAN")
 
-  /** Thread pool for the stats store's many INDEPENDENT tiny Spark
-    * actions (round 19, guide §2.6 "overlap independent jobs"): one
-    * generation is ~7 single-task parquet tables, and reading or writing
-    * them sequentially paid ~7 driver job latencies where the jobs have no
-    * dependency on each other. The pool only ever runs driver-side job
-    * submission (each job's tasks still execute on the executor pool), and
-    * daemon threads never hold the JVM open.
-    *
-    * CACHED, not fixed (round 20, VERDICT r19 what's-wrong 1 / ADVICE
-    * r19): the r19 fixed-8 pool plus `Await.result(…, Inf)` deadlocked
-    * FOREVER if any caller nested two blocking [[inParallel]] levels — a
-    * rule enforced only by comment. A cached pool grows a thread for every
-    * parked Await instead of starving, so nested composition (a whole
-    * query leg on a pool thread whose internals fan out again) is safe by
-    * construction. Thread count stays bounded in practice by the call
-    * structure (tens, not thousands — each task is one driver-side job
-    * submission), and idle threads retire after 60 s. */
-  private lazy val statsPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-stats-io"); t.setDaemon(true); t
-      }))
-
-  /** The shared pool, for sibling modules composing whole independent
-    * query legs (round 20: q311's scratch-store builds overlap its
-    * planning walk, q315's ANN and stats legs overlap each other). */
-  private[graft] def ioPool: scala.concurrent.ExecutionContext = statsPool
-
-  /** Run independent tasks concurrently and return their results in input
-    * order; rethrows the first failure. Single-element lists run inline.
-    * The thread-scoped cap seams ([[withCaps]]) are re-established inside
-    * each task so a spec-lowered cap governs pool threads too. Shared with
-    * the index-store writers (round 19) — same discipline, same pool.
-    * Safe to NEST (round 20): the cached pool never starves a parked
-    * Await, so a task may itself call inParallel (Round20Spec drives a
-    * deliberately nested call to completion). */
-  private[graft] def inParallel[T](tasks: Seq[() => T]): Seq[T] =
-    if (tasks.lengthCompare(1) <= 0) tasks.map(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = statsPool
-      val carry = carryRowsCap.value
-      val dom = histDomainCap.value
-      tasks.map(t => Future(
-        carryRowsCap.withValue(carry)(histDomainCap.withValue(dom)(t()))))
-        .map(f => Await.result(f, Duration.Inf))
-    }
-
   /** In-JVM memo of IMMUTABLE generation content (round 19): a CAS
     * append's base is almost always the generation THIS JVM just
     * published, and re-reading its ~7 tiny parquet tables through ~7
@@ -664,76 +611,68 @@ object StatsStore {
     // the managed tables and every unmanaged carry are INDEPENDENT
     // single-task parquet reads — overlap them (round 19, guide §2.6:
     // sequential reads paid ~7 driver job latencies back to back)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = statsPool
-    val ndvF = Future {
+    val ndv = Par.fork {
       s.read.parquet(s"$gen/column_ndv").select("tbl", "col", "regs").collect()
         .map(r => (r.getString(0), r.getString(1), r.getSeq[Long](2).toSeq)).toSeq
     }
-    val rowsF = Future {
+    val rows = Par.fork {
       s.read.parquet(s"$gen/table_rows").select("tbl", "row_count").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-    val histF = Future {
+    val hist = Par.fork {
       if (!new java.io.File(s"$gen/column_hist").exists()) Seq.empty[HistRow]
       else s.read.parquet(s"$gen/column_hist")
         .select("tbl", "col", "bucket", "up_to", "cum_cnt").collect()
         .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))
         .toSeq
     }
-    val spanF = Future {
+    val span = Par.fork {
       if (!new java.io.File(s"$gen/column_span").exists()) Seq.empty[SpanRow]
       else s.read.parquet(s"$gen/column_span")
         .select("tbl", "lo_col", "hi_col", "med_span", "max_span").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
         .toSeq
     }
-    val fanoutF = Future {
+    val fanout = Par.fork {
       if (!new java.io.File(s"$gen/column_fanout").exists()) Seq.empty[FanRow]
       else s.read.parquet(s"$gen/column_fanout")
         .select("tbl", "col", "avg_len", "max_len").collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSeq
     }
-    val histCountsF = Future {
+    val histCounts = Par.fork {
       if (!new java.io.File(s"$gen/column_hist_counts").exists()) Seq.empty[CountRow]
       else s.read.parquet(s"$gen/column_hist_counts")
         .select("tbl", "col", "v", "cnt").collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSeq
     }
-    val srcBytesF = Future {
+    val srcBytes = Par.fork {
       if (!new java.io.File(s"$gen/table_src_bytes").exists()) Seq.empty[(String, Long)]
       else s.read.parquet(s"$gen/table_src_bytes")
         .select("tbl", "src_bytes").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-    // the caps are thread-scoped test seams (withCaps) — read them on the
-    // CALLING thread; pool threads never see the DynamicVariable scope
-    val maxCarry = MaxCarryRows
-    val extraF = Future.traverse(
-      Option(new java.io.File(gen).listFiles()).getOrElse(Array.empty)
-        .filter(f => !ManagedTables.contains(f.getName)).toSeq) { f =>
-      Future {
-        val df = s.read.parquet(f.getPath)
-        val data = df.collect().toSeq
-        // the verbatim carry is DRIVER-materialized — correct only under
-        // the store contract (spans/fan-out/small interval tables). A user
-        // parking a big relation in a stats generation would turn every
-        // append into a driver OOM; fail the append loudly instead
-        // (ADVICE/VERDICT r14 what's wrong 3)
-        if (data.length > maxCarry)
-          throw new IllegalStateException(
-            s"unmanaged stats table '${f.getName}' has ${data.length} rows — " +
-              s"the CAS carry is driver-materialized and capped at $maxCarry; " +
-              "large relations do not belong in a stats generation")
-        f.getName -> ((df.schema, data))
+    val extra = Option(new java.io.File(gen).listFiles()).getOrElse(Array.empty)
+      .filter(f => !ManagedTables.contains(f.getName)).toSeq.map { f =>
+        Par.fork {
+          val df = s.read.parquet(f.getPath)
+          val data = df.collect().toSeq
+          // the verbatim carry is DRIVER-materialized — correct only under
+          // the store contract (spans/fan-out/small interval tables). A user
+          // parking a big relation in a stats generation would turn every
+          // append into a driver OOM; fail the append loudly instead
+          // (ADVICE/VERDICT r14 what's wrong 3)
+          if (data.length > MaxCarryRows)
+            throw new IllegalStateException(
+              s"unmanaged stats table '${f.getName}' has ${data.length} rows — " +
+                s"the CAS carry is driver-materialized and capped at $MaxCarryRows; " +
+                "large relations do not belong in a stats generation")
+          f.getName -> ((df.schema, data))
+        }
       }
-    }
-    def get[T](f: Future[T]): T = Await.result(f, Duration.Inf)
-    StatsContent(get(ndvF), get(rowsF), get(histF), get(spanF), get(fanoutF),
-      get(histCountsF), get(srcBytesF), get(extraF).toMap)
+    StatsContent(ndv(), rows(), hist(), span(), fanout(), histCounts(),
+      srcBytes(), extra.map(_()).toMap)
   }
 
   /** Hard cap on an unmanaged table's rows through the CAS carry (and on
@@ -742,7 +681,7 @@ object StatsStore {
     * [[withCaps]] like [[HistMaxDomain]] (the fixture refusal cases sit
     * below the production cap). */
   private val MaxCarryRowsDefault = 10000
-  private val carryRowsCap = new scala.util.DynamicVariable[Option[Int]](None)
+  private val carryRowsCap = new Par.Local[Option[Int]](None)
   private[graft] def MaxCarryRows: Int =
     carryRowsCap.value.getOrElse(MaxCarryRowsDefault)
 
@@ -776,7 +715,7 @@ object StatsStore {
       writes += (() => s.createDataFrame(data.asJava, schema)
         .coalesce(1).write.parquet(s"$g/$name"))
     }
-    inParallel(writes.result()); ()
+    Par.all(writes.result()); ()
   }
 
   /** The seven planner-catalog maps, derived DRIVER-SIDE from content the
@@ -1094,17 +1033,15 @@ object StatsStore {
     * materializing. */
   private def histCounterRows(s: SparkSession, table: String, df: DataFrame,
       histCols: Seq[String]): Seq[CountRow] = {
-    // one bounded job per column, columns concurrently (round 19, §2.6);
-    // the cap is a thread-scoped test seam — read it on the calling thread
-    val maxCarry = MaxCarryRows
-    inParallel(histCols.map { c => () =>
+    // one bounded job per column, columns concurrently (round 19, §2.6)
+    Par.all(histCols.map { c => () =>
       val rows = df.select(histCountDomain(df, c).as("v"))
         .filter(col("v").isNotNull)
         .groupBy("v").agg(count(lit(1)).as("c"))
-        .limit(maxCarry + 1).collect()
-      if (rows.length > maxCarry)
+        .limit(MaxCarryRows + 1).collect()
+      if (rows.length > MaxCarryRows)
         throw new IllegalStateException(
-          s"histogram counter domain for $table.$c exceeds $maxCarry distinct " +
+          s"histogram counter domain for $table.$c exceeds $MaxCarryRows distinct " +
             "values — coarsen the domain (day truncation) before counter maintenance")
       rows.map(r => (table, c, r.getLong(0), r.getLong(1))).toSeq
     }).flatten
@@ -1137,13 +1074,10 @@ object StatsStore {
       eqCols: Seq[String] = Nil): String = graft.LifecycleMeter.time {
     refuseStringHist(df, table, histCols)
     // the register scan and the counter scans are independent jobs over
-    // the same frame — overlap them (round 19, §2.6): registers on a pool
-    // future (no blocking inside it), counters on the calling thread
-    // (their own inParallel awaits HERE, never on a pool thread)
-    val regsF = scala.concurrent.Future(registersOf(s, df, cols))(statsPool)
+    // the same frame — overlap them (round 19, §2.6)
+    val regs = Par.fork(registersOf(s, df, cols))
     val counters = histCounterRows(s, table, df, histCols ++ eqCols)
-    val (ndv, n) = scala.concurrent.Await.result(
-      regsF, scala.concurrent.duration.Duration.Inf)
+    val (ndv, n) = regs()
     val hist = histCols.flatMap { c =>
       boundariesFromCounts(table, c,
         counters.collect { case (_, cc, v, cnt) if cc == c => v -> cnt }.toMap)
@@ -1185,10 +1119,9 @@ object StatsStore {
       refuseStringHist(delta, table, histCols)
       val counterCols = histCols ++ eqCols
       // same overlap as buildTableStats: delta registers ∥ delta counters
-      val dregsF = scala.concurrent.Future(registersOf(s, delta, cols))(statsPool)
+      val deltaRegs = Par.fork(registersOf(s, delta, cols))
       val dCounters = histCounterRows(s, table, delta, counterCols)
-      val (dndv, dn) = scala.concurrent.Await.result(
-        dregsF, scala.concurrent.duration.Duration.Inf)
+      val (dndv, dn) = deltaRegs()
       val dregs = dndv.toMap
       val dBytes = scanBytesOf(delta)
       casPublishStats(s, root) { b =>
@@ -1869,7 +1802,7 @@ object StatsStore {
       // the two tables' builds are independent scans (round 20, §2.6);
       // the CAS serializes their publishes per root, and the final merged
       // generation carries both tables regardless of landing order
-      inParallel(Seq(
+      Par.all(Seq(
         () => buildTableStats(s, root, "events", Tables.events(s, dir),
           Seq("user_id"), Nil, Seq("event_type")),
         () => buildTableStats(s, root, "orders", Tables.orders(s, dir),
@@ -1966,7 +1899,7 @@ object StatsStore {
       // The two tables' builds are independent scans (round 20, §2.6);
       // the CAS serializes their publishes and the merged generation is
       // landing-order independent
-      inParallel(Seq(
+      Par.all(Seq(
         () => buildTableStats(s, root, "events", Tables.events(s, dir),
           Seq("user_id"), Seq("user_id"), Seq("event_type")),
         () => buildTableStats(s, root, "orders", Tables.orders(s, dir),
@@ -2078,7 +2011,7 @@ object StatsStore {
         // the batch ANALYZE (aroot) target independent roots — overlap
         // the two legs (round 20, §2.6); order inside the lifecycle leg
         // is the judged subject and stays sequential
-        inParallel(Seq(
+        Par.all(Seq(
           () => {
             val li = Tables.lineitem(s, dir)
             buildTableStats(s, cr, "lineitem", li.filter(expr("l_orderkey % 5 <> 0")),
@@ -2334,7 +2267,7 @@ object StatsStore {
       // independent of the planning walk and of each other, so they run
       // CONCURRENTLY with shapes 1–9 on the shared pool (round 20, guide
       // §2.6; VERDICT r19's top ask: q311's store jobs ran back-to-back).
-      // Each future is awaited immediately BEFORE its consumer shape:
+      // Each build is joined immediately BEFORE its consumer shape:
       // the MV write before SummaryRouting.register (which must still
       // happen after shapes 1–9 so none of them see the rule), the stale
       // build before shape 15's DirKey switch. Neither build plans a
@@ -2342,16 +2275,16 @@ object StatsStore {
       // from them regardless of where the walk's threshold knob sits.
       val mvDir = scratchDir("graft_diag_mv")
       val basePath = s"$dir/events.parquet"
-      val mvF = scala.concurrent.Future {
+      val mvBuilt = Par.fork {
         graft.LifecycleMeter.time {
           sPos.read.parquet(basePath).groupBy("event_type")
             .agg(count(lit(1)).as("cnt"), sum("user_id").as("sum_uid"))
             .write.mode("overwrite").parquet(s"$mvDir/summary")
         }
-      }(statsPool)
+      }
       val stDir = scratchDir("graft_diag_stale")
       val stTbl = s"$stDir/events.parquet"
-      val staleF = scala.concurrent.Future {
+      val staleBuilt = Par.fork {
         graft.LifecycleMeter.time {
           Tables.events(sPos, dir)
             .select(col("event_id"), col("user_id"), col("value"))
@@ -2363,7 +2296,7 @@ object StatsStore {
               col("user_id"), col("value"))
             .write.mode("append").parquet(stTbl)
         }
-      }(statsPool)
+      }
       // 1. the q274 grouped-dim flip (fired: grouped-dim)
       val prioDim = Tables.orders(sPos, dir)
         .groupBy("o_orderpriority").agg(count(lit(1)).as("n_prio"))
@@ -2424,7 +2357,7 @@ object StatsStore {
       //     registered LAST so none of the earlier shapes see the rule
       //     (the WRITE ran concurrently with shapes 1–9; only the
       //     registration waits here)
-      scala.concurrent.Await.result(mvF, scala.concurrent.duration.Duration.Inf)
+      mvBuilt()
       graft.plans.SummaryRouting.register(sPos, "events.parquet",
         sPos.read.parquet(s"$mvDir/summary"), Seq("event_type"),
         Some("cnt"), Map("user_id" -> "sum_uid"))
@@ -2485,7 +2418,7 @@ object StatsStore {
       //     (bailed: stale-stats — "refresh the stats", not "uncovered")
       //     (the build+out-of-band append ran concurrently with shapes
       //     1–14; only the DirKey switch waits here)
-      scala.concurrent.Await.result(staleF, scala.concurrent.duration.Duration.Inf)
+      staleBuilt()
       sPos.conf.set(graft.plans.SketchStats.DirKey, s"$stDir/store")
       planned(Tables.orders(sPos, dir)
         .select(col("o_custkey"), col("o_orderpriority"))

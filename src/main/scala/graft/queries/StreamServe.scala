@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Streamed sketches SERVED end-to-end (VERDICT r11 item 5): r11's
   * SketchStreams proved the streamed HDR/HLL registers byte-equal the
@@ -668,7 +668,7 @@ object StreamServe {
             graft.streaming.EventStreams.streamingHllRegisters(src),
             timeoutMs = 600000L))
         }
-        val both = StatsStore.inParallel(Seq(
+        val both = Par.all(Seq(
           () => ingest(survivorsOnly = false),
           () => ingest(survivorsOnly = true)))
         publishHllRows(both(0)._1, both(0)._2, root)

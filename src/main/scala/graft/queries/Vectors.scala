@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Par, Tables}
 
 /** Similarity search over the 64-d `embeddings` fixture (driver north star;
   * SURVEY.md §2.8 "Vector", §7 M4).
@@ -148,7 +148,7 @@ object Vectors {
     // k-means training never races itself from two pool threads
     val cent = kmCentroids(s, dir)
     val codes = kmFrame(s, dir)
-    StatsStore.inParallel(Seq(
+    Par.all(Seq(
       () => cent.zipWithIndex
         .map { case (c, i) => (i + 1, c.toSeq) }.toDF("cluster", "cv")
         .coalesce(1)
@@ -187,7 +187,7 @@ object Vectors {
     // so their cached builds never race from two pool threads
     val cb = rpqCodebooks(s, dir)
     val enc = rpqEncFrame(s, dir)
-    StatsStore.inParallel(Seq(
+    Par.all(Seq(
       () => (for (m <- 0 until PqM; k <- cb(m).indices)
           yield (m, k + 1, cb(m)(k).toSeq))
         .toDF("m", "k", "cv").coalesce(1)
@@ -215,11 +215,10 @@ object Vectors {
     * (round 20, VERDICT r19 item 3 — they ran back to back). The cached
     * trainings and memoized frames are resolved BEFORE the parallel block
     * so neither layer races a duplicate materialization (Memo's lost-race
-    * cost) from two pool threads; each writer's own inner inParallel
-    * nests safely on the cached pool. */
+    * cost) from two pool threads. */
   private def writeIvfPqGen(s: SparkSession, dir: String)(g: String): Unit = {
     kmCentroids(s, dir); kmFrame(s, dir); rpqCodebooks(s, dir); rpqEncFrame(s, dir)
-    StatsStore.inParallel(Seq(
+    Par.all(Seq(
       () => writeIvfIndex(s, dir, g),
       () => writePqIndex(s, dir, g)))
     ()
@@ -1315,7 +1314,7 @@ object Vectors {
       def writeGen(members: org.apache.spark.sql.DataFrame)(g: String): Unit = {
         // centroid and code tables are independent writes into the same
         // staging generation — overlap them (round 19, guide §2.6)
-        StatsStore.inParallel(Seq(
+        Par.all(Seq(
           () => centB.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
             .toDF("cluster", "cv").coalesce(1)
             .write.mode("overwrite").parquet(s"$g/centroids"),
@@ -1390,9 +1389,8 @@ object Vectors {
       // q315's remaining 39 warm jobs were two full publishes plus the
       // stats lifecycle, back to back). Ordering constraints live INSIDE
       // each leg (gen 1 before the count before gen 2; build 1 before
-      // build 2); the cached pool makes the nested inParallel fan-outs
-      // safe. Values computed are identical to the sequential form.
-      val annF = scala.concurrent.Future {
+      // build 2). Values computed are identical to the sequential form.
+      val ann = Par.fork {
         // ANN leg (build phases metered — VERDICT r16 item 6: the k-means
         // training is the dominant per-invocation build cost here, beyond
         // what the publish-layer meter sees)
@@ -1402,7 +1400,7 @@ object Vectors {
           val cent = graft.operators.KMeans.fit(all, kmInit, KmIters)
           val p1 = graft.IndexStore.publish(aroot) { g =>
             // independent tables — overlap (round 19, guide §2.6)
-            StatsStore.inParallel(Seq(
+            Par.all(Seq(
               () => cent.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
                 .toDF("cluster", "cv").coalesce(1).write.parquet(s"$g/centroids"),
               () => all
@@ -1417,7 +1415,7 @@ object Vectors {
         graft.IndexStore.publish(aroot) { g =>
           // frozen quantizer: gen 1's centroid table carried VERBATIM;
           // the carry and the filtered republish are independent — overlap
-          StatsStore.inParallel(Seq(
+          Par.all(Seq(
             () => s.read.parquet(s"$g1/centroids").coalesce(1)
               .write.parquet(s"$g/centroids"),
             () => g1codes.filter(pmod(col("vec_id"), lit(50)) =!= 7)
@@ -1434,18 +1432,18 @@ object Vectors {
             lit(0L)).as("resid"),
           coalesce(sum("vec_id"), lit(0L)).as("w")).head()
         (annBefore, annRow.getLong(0), annRow.getLong(1), annRow.getLong(2))
-      }(StatsStore.ioPool)
+      }
       // erased + surviving counts in ONE pass over events: the pmod
       // filters partition the non-null user_id rows exactly like the two
       // retired filter().count() jobs (pmod(NULL) is NULL → neither side)
       val ev = Tables.events(s, dir)
-      val evF = scala.concurrent.Future {
+      val evCounts = Par.fork {
         ev.agg(
           coalesce(sum(when(pmod(col("user_id"), lit(50)) === 7, 1L).otherwise(0L)),
             lit(0L)).as("erased"),
           coalesce(sum(when(pmod(col("user_id"), lit(50)) =!= 7, 1L).otherwise(0L)),
             lit(0L)).as("surv")).head()
-      }(StatsStore.ioPool)
+      }
       // stats leg (calling thread)
       val sroot = StatsStore.scratchRoot("graft_erase_stats")
       StatsStore.buildTableStats(s, sroot, "events", ev, Seq("user_id"))
@@ -1453,7 +1451,7 @@ object Vectors {
       StatsStore.buildTableStats(s, sroot, "events", surviving, Seq("user_id"))
       val servedGen = graft.plans.StatsCatalog.resolveBase(sroot)
       // three independent single-row store reads — overlap them
-      val statsReads = StatsStore.inParallel(Seq(
+      val statsReads = Par.all(Seq(
         () => s.read.parquet(s"${graft.IndexStore.genPath(sroot, 1L)}/table_rows")
           .head().getAs[Long]("row_count"),
         () => s.read.parquet(s"$servedGen/table_rows")
@@ -1462,10 +1460,8 @@ object Vectors {
           .head().getAs[Long]("ndv_est")))
       val (statsBefore, statsAfter, statsWitness) =
         (statsReads(0), statsReads(1), statsReads(2))
-      val (annBefore, annAfter, annResidual, annWitness) =
-        scala.concurrent.Await.result(annF, scala.concurrent.duration.Duration.Inf)
-      val evRow =
-        scala.concurrent.Await.result(evF, scala.concurrent.duration.Duration.Inf)
+      val (annBefore, annAfter, annResidual, annWitness) = ann()
+      val evRow = evCounts()
       val statsErased = evRow.getLong(0)
       val statsResidual = statsAfter - evRow.getLong(1)
       Seq(
