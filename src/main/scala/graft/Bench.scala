@@ -85,38 +85,25 @@ object Bench {
     }
     val prebuildFailed = failedBuilds.nonEmpty
     val coldBuildsSec = (System.nanoTime() - b0) / 1e9
-    // Spark-job counter: bench WALL times on this box vary up to 3× under
-    // load (the r10→r11 "drift" lesson), but the number of driver jobs a
-    // query schedules (AQE stage jobs + actions + broadcast builds) is
+    // Spark jobs per (pass, query), from JobMeter: bench WALL times on this
+    // box vary up to 3× under load, but the jobs a query schedules are
     // load-INDEPENDENT — bench_jobs.json is the noise-free per-query
-    // baseline regressions get diffed against.
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
-    // jobs per (pass, query): pass 2 is the canonical warm count (no
-    // first-run side-effect builds inflating it); pass 1's is kept so a
-    // budget-shed run still writes A job baseline, flagged as cold
+    // baseline regressions get diffed against. Pass 2 is the canonical
+    // warm count (no first-run side-effect builds inflating it); pass 1's
+    // is kept so a budget-shed run still writes A job baseline, flagged
+    // as cold
     val jobCounts = Seq(1, 2).map(p =>
       p -> scala.collection.mutable.LinkedHashMap[String, Long]()).toMap
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         name: String, pass: Int): Run = {
-      // flush the PREVIOUS query's late events off the bus (ADVICE r11:
-      // onJobStart delivers asynchronously — a late event must never
-      // attribute one query's job to the next); the drain sits OUTSIDE
-      // the timed span
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      // JobMeter's bus drains sit OUTSIDE the timed span
+      val j0 = JobMeter.total(spark.sparkContext)
       LifecycleMeter.drainSec() // discard accrual outside any timed span
-      val j0 = jobs.get()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val t = (System.nanoTime() - t0) / 1e9
       val build = LifecycleMeter.drainSec()
-      jobCounts.get(pass).foreach { m =>
-        org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-        m(name) = jobs.get() - j0
-      }
+      jobCounts.get(pass).foreach(m => m(name) = JobMeter.total(spark.sparkContext) - j0)
       Run(t, build, ok)
     }
     // Sampling protocol v3 (round 19, VERDICT r18 item 1): sweep 1 runs

@@ -21,22 +21,11 @@ object Dev {
     args.toList match {
       case "probe" :: names =>
         graft.operators.Iterate.setRecording(true)
-        // Spark-job counter: the load-independent measure of driver barriers
-        // (the thing the fused Iterate rounds exist to minimize)
-        val jobs = new java.util.concurrent.atomic.AtomicLong()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-        })
         for (name <- names; _ <- 1 to 3) {
-          val j0 = jobs.get()
           val t0 = System.nanoTime()
-          val n = query(name).count()
+          val (n, jobs) = JobMeter.during(spark.sparkContext)(query(name).count())
           val t = (System.nanoTime() - t0) / 1e9
-          // listener events deliver asynchronously — drain before sampling so
-          // a late onJobStart never lands in the NEXT run's count (ADVICE r11)
-          org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-          println(f"PROBE $name rows=$n t=$t%.3f jobs=${jobs.get() - j0}")
+          println(f"PROBE $name rows=$n t=$t%.3f jobs=$jobs")
           graft.operators.Iterate.drainRounds().foreach(r =>
             println(f"  ROUND ${r.label}%s ${r.round}%d ${r.ms / 1000.0}%.3f jobs=${r.jobs}%d"))
         }

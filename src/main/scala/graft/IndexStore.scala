@@ -141,7 +141,8 @@ object IndexStore {
     }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Delete `f` and everything under it, best effort. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()
   }

@@ -50,9 +50,10 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
   *    executes the whole chain as one pipelined job — the PageRank
   *    economics, reached without giving up the shared harness.
   *
-  * Timing: every round's wall ms is recorded under `label` when recording
-  * is enabled ([[setRecording]] — Bench turns it on; Verify/Serve/test
-  * JVMs leave it off so the log never grows unread, ADVICE r10);
+  * Timing: every round's wall ms and Spark jobs ([[graft.JobMeter]]) are
+  * recorded under `label` when recording is enabled ([[setRecording]] —
+  * Bench turns it on; Verify/Serve/test JVMs leave it off so the log
+  * never grows unread, ADVICE r10);
   * [[drainRounds]] hands the log to Bench, which writes it beside
   * bench_passes.json so the barrier floor is measured, not inferred.
   * FixedRounds rounds record plan-compile time only — their barrier is
@@ -80,43 +81,12 @@ object Iterate {
   private val roundLog = new java.util.concurrent.ConcurrentLinkedQueue[RoundStat]()
   @volatile private var recording = false
 
-  /** Per-round Spark-job counter, attached once per context when recording
-    * is on — job counts are the load-independent A/B metric for this
-    * family (wall clock on a shared box swings 3×), so the round log
-    * carries them beside the wall ms. Keyed PER SparkContext (ADVICE r12:
-    * a shared counter conflates contexts); deltas are still only
-    * meaningful when nothing else runs jobs on the SAME context between
-    * the two samples — the single-threaded-bench assumption documented at
-    * [[setRecording]]. */
-  private val jobCounters =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.SparkContext, java.util.concurrent.atomic.AtomicLong]()
-  private def jobsNow(df: DataFrame): Long = {
-    val sc = df.sparkSession.sparkContext
-    val counter = jobCounters.computeIfAbsent(sc, { sc0 =>
-      val c = new java.util.concurrent.atomic.AtomicLong()
-      sc0.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { c.incrementAndGet(); () }
-        // a stopped context must not be retained by the map's strong key
-        // (ADVICE r13: suites/apps that restart contexts leaked every old
-        // context + listener); the bus drops its listeners itself on stop
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          { jobCounters.remove(sc0); () }
-      })
-      c
-    })
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    counter.get()
-  }
-
   /** Enable/disable per-round stat capture (Bench enables; everything else
     * leaves it off so long-lived JVMs don't accumulate an undrained log).
-    * ASSUMES a single-threaded bench: per-round job deltas are sampled
-    * from a per-context counter, so a concurrent query on the same context
-    * while recording is on pollutes the deltas (wall ms stays accurate). */
+    * ASSUMES a single-threaded bench: per-round job deltas are
+    * [[graft.JobMeter]] samples of the whole context, so a concurrent query
+    * on the same context while recording is on pollutes the deltas (wall
+    * ms stays accurate). */
   def setRecording(on: Boolean): Unit = { recording = on; if (!on) roundLog.clear() }
 
   /** Drain and return all per-round stats recorded since the last drain. */
@@ -147,6 +117,7 @@ object Iterate {
     // SAME partition count, and the claim would silently mis-join (ADVICE
     // r12). Pin the conf off for the loop's duration; restored in finally.
     val sessionConf = frontier0.sparkSession.conf
+    val sc = frontier0.sparkSession.sparkContext
     val aggKeysConf = "spark.sql.requireAllClusterKeysForAggregation"
     val aggKeysPrev = sessionConf.getOption(aggKeysConf)
     sessionConf.set(aggKeysConf, "false")
@@ -171,7 +142,7 @@ object Iterate {
     while (r < maxRounds && live) {
       r += 1
       val t0 = System.nanoTime()
-      val j0 = if (recording) jobsNow(frontier) else 0L
+      val j0 = if (recording) graft.JobMeter.total(sc) else 0L
       val (f, s1) = round(r, frontier, state)
       if (cutFrontier) frontier = cut(f) else frontier = f
       // ONE action: the aggregate scan materializes the lazy checkpoint's
@@ -192,7 +163,7 @@ object Iterate {
       }
       state = absorb(frontier, s1)
       if (recording) roundLog.add(RoundStat(label, r,
-        (System.nanoTime() - t0) / 1e6, jobsNow(frontier) - j0))
+        (System.nanoTime() - t0) / 1e6, graft.JobMeter.total(sc) - j0))
     }
     state
     } finally {

@@ -107,11 +107,7 @@ object StatsStore {
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   private lazy val scratchHookInstalled: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchDirs.forEach(f => deleteRecursively(f))))
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
+      scratchDirs.forEach(f => graft.IndexStore.deleteRecursively(f))))
 
   private[graft] def estExpr(regs: String) = expr(
     s"cast((${Advanced.HllEstNum}) div (650790 * cast(aggregate($regs, cast(0 as bigint), " +

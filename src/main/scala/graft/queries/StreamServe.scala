@@ -52,27 +52,17 @@ object StreamServe {
       throw new IllegalStateException("bounded stream build timed out")
   }
 
-  /** State-partition count for the bounded streamed builders (round 19,
-    * guide §1.2 — the distributed algorithm first): a NEW streaming
-    * checkpoint sizes its state stores from `spark.sql.shuffle.partitions`,
-    * which the bench keys to the BATCH core count — 32 RocksDB instances
-    * (open + fill + commit + checkpoint each) per ingest, for state keyed
-    * by a handful of event types. State partitioning should track the key
-    * domain and ingest throughput, not batch CPUs; the builders pin a
-    * small default, overridable per deployment via
-    * `graft.stream.statePartitions`. Per-key state is partition-count
-    * invariant, so published store content is unchanged.
-    *
-    * Since round 20 the override is read from the PARENT session too
-    * (ADVICE r19: `SparkSession.newSession()` does not inherit runtime
-    * conf set on the parent, so a user's `spark.conf.set(...)` on the
-    * outer session was silently ignored — only a launch-time SparkConf
-    * entry took effect). Child-session conf still wins when set. */
-  private def tuneStreamBuild(parent: SparkSession, ss: SparkSession): SparkSession = {
-    ss.conf.set("spark.sql.shuffle.partitions",
-      ss.conf.getOption("graft.stream.statePartitions")
-        .orElse(parent.conf.getOption("graft.stream.statePartitions"))
-        .getOrElse("8"))
+  /** A fresh session for a bounded streamed build (round 19, guide §1.2 —
+    * the distributed algorithm first). A NEW streaming checkpoint sizes its
+    * state stores from `spark.sql.shuffle.partitions`, which the bench keys
+    * to the BATCH core count — 32 RocksDB instances (open + fill + commit +
+    * checkpoint each) per ingest, for state keyed by a handful of event
+    * types. State partitioning should track the key domain and ingest
+    * throughput, not batch CPUs, so the builders pin 8. Per-key state is
+    * partition-count invariant, so published store content is unchanged. */
+  private def streamBuildSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss
   }
 
@@ -106,7 +96,7 @@ object StreamServe {
     val root = StatsStore.fixtureRoot("graft_stream_regs", dir)
     root.intern.synchronized {
       graft.IndexStore.latestPathCached(root).getOrElse {
-        val ss = tuneStreamBuild(s, s.newSession())
+        val ss = streamBuildSession(s)
         ss.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         val stream = graft.streaming.EventStreams.streamingHdrRegisters(
@@ -126,7 +116,7 @@ object StreamServe {
     val root = StatsStore.fixtureRoot("graft_stream_hll", dir)
     root.intern.synchronized {
       graft.IndexStore.latestPathCached(root).getOrElse {
-        val ss = tuneStreamBuild(s, s.newSession())
+        val ss = streamBuildSession(s)
         ss.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         buildAndPublishHll(ss,
@@ -204,7 +194,7 @@ object StreamServe {
             StatsStore.estExpr("regs").as("ndv_est"))
         // events row count: a bounded streaming aggregate; counts only
         // grow, so the LAST update is the total
-        val ss = tuneStreamBuild(s, s.newSession())
+        val ss = streamBuildSession(s)
         val cnt = new java.util.concurrent.atomic.AtomicLong(-1L)
         runBounded(graft.streaming.EventStreams.readEventStream(ss, dir)
             .groupBy().count()) { b =>
@@ -307,13 +297,13 @@ object StreamServe {
           .select("regs").collect().map(_.getSeq[Long](0))
         val merged = regRows
           .reduce((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) }).toSeq
-        val ss = tuneStreamBuild(s, s.newSession())
+        val ss = streamBuildSession(s)
         val cnt = new java.util.concurrent.atomic.AtomicLong(-1L)
         runBounded(graft.streaming.EventStreams.readEventStream(ss, dir)
             .groupBy().count()) { b =>
           b.collect().foreach(r => cnt.set(r.getLong(0)))
         }
-        val ss2 = tuneStreamBuild(s, s.newSession())
+        val ss2 = streamBuildSession(s)
         val dayCounts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
         runBounded(graft.streaming.EventStreams.readEventStream(ss2, dir)
             .groupBy(expr(
@@ -656,7 +646,7 @@ object StreamServe {
         // guide §2.6); only the PUBLISHES stay ordered so the judged
         // pinned-gen-1 / served-gen-2 contract is untouched
         def ingest(survivorsOnly: Boolean): (SparkSession, Seq[(String, Seq[Long])]) = {
-          val ss = tuneStreamBuild(s0, s0.newSession())
+          val ss = streamBuildSession(s0)
           ss.conf.set("spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
           val src0 = graft.streaming.EventStreams.readEventStream(ss, dir)

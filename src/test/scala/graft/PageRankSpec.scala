@@ -67,24 +67,13 @@ class PageRankSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = Seq("a" -> "b", "b" -> "a").toDF("name", "dep")
     val nodes = Seq("a", "b").toDF("name")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val pr = PageRank.run(spark, edges, nodes, 4, Scale)
-      // actions block before returning; give the async listener bus a
-      // moment to drain, then pin: exactly the emptiness probe, never a
-      // full nodes.count() (which would be a second job).
-      val deadline = System.nanoTime() + 3000000000L
-      while (jobs < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(100)
-      assert(jobs <= 1, s"run() must not launch driver-side scans; saw $jobs jobs")
-      // and the node count lives in the plan as a broadcast aggregate
-      assert(pr.queryExecution.optimizedPlan.toString.contains("__floor"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // exactly the emptiness probe, never a full nodes.count() (which would
+    // be a second job)
+    val (pr, jobs) =
+      JobMeter.during(spark.sparkContext)(PageRank.run(spark, edges, nodes, 4, Scale))
+    assert(jobs <= 1, s"run() must not launch driver-side scans; saw $jobs jobs")
+    // and the node count lives in the plan as a broadcast aggregate
+    assert(pr.queryExecution.optimizedPlan.toString.contains("__floor"))
   }
 
   test("rank flows: a node fed by a hub outranks one fed by a leaf") {

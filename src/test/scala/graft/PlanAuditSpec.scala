@@ -329,17 +329,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // join must run NO Spark job (no planning-time scan of the interval
     // side); without stats the probe fallback remains and pays its one
     // bounded aggregate job.
-    def countJobs(s: org.apache.spark.sql.SparkSession)(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { n.incrementAndGet(); () }
-      }
-      s.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(s.sparkContext) }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val sCat = spark.newSession()
     graft.plans.RangeJoinRewrite.ensure(sCat)
     val store = queries.StatsStore.ensureStats(sCat, dir)
@@ -352,8 +341,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val ev = Tables.events(sCat, dir)
       .select(org.apache.spark.sql.functions.expr("unix_micros(cast(ts as timestamp))").as("t"))
     val j = ev.join(wins, col("t") >= col("ws") && col("t") < col("we"))
-    var planned: String = null
-    val jobs = countJobs(sCat) { planned = j.queryExecution.executedPlan.toString }
+    val (planned, jobs) = JobMeter.during(sCat.sparkContext)(j.queryExecution.executedPlan.toString)
     assert(planned.contains("__rj_b"), "catalog-width rewrite did not fire")
     assert(jobs == 0L, s"planning ran $jobs job(s) — the interval side was probed " +
       "despite a warm span catalog")
@@ -364,8 +352,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val ev2 = Tables.events(sProbe, dir)
       .select(org.apache.spark.sql.functions.expr("unix_micros(cast(ts as timestamp))").as("t"))
     val j2 = ev2.join(wins2, col("t") >= col("ws") && col("t") < col("we"))
-    var planned2: String = null
-    val jobs2 = countJobs(sProbe) { planned2 = j2.queryExecution.executedPlan.toString }
+    val (planned2, jobs2) =
+      JobMeter.during(sProbe.sparkContext)(j2.queryExecution.executedPlan.toString)
     assert(planned2.contains("__rj_b"), "probe-fallback rewrite did not fire")
     assert(jobs2 >= 1L, "expected the planning-time probe job without a span catalog")
   }
@@ -376,17 +364,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // now live in the unified stream+batch root, so RangeJoinRewrite's
     // zero-probe width and the NDV broadcast flip plan from the SAME
     // DirKey — previously a session picked one store or the other.
-    def countJobs(s: org.apache.spark.sql.SparkSession)(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { n.incrementAndGet(); () }
-      }
-      s.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(s.sparkContext) }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     graft.plans.RangeJoinRewrite.ensure(s)
@@ -411,8 +388,7 @@ class PlanAuditSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n_ord"), max("o_orderpriority").as("top_prio"))
     val j = ev.join(wins, col("t") >= col("ws") && col("t") < col("we"))
       .join(perCust, col("user_id") === col("o_custkey"))
-    var planned: String = null
-    val jobs = countJobs(s) { planned = j.queryExecution.executedPlan.toString }
+    val (planned, jobs) = JobMeter.during(s.sparkContext)(j.queryExecution.executedPlan.toString)
     assert(planned.contains("__rj_b"),
       s"catalog-width range rewrite did not fire from the unified root:\n${planned.take(2000)}")
     assert(jobs == 0L,
@@ -435,8 +411,8 @@ class PlanAuditSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n_ord"), max("o_orderpriority").as("top_prio"))
     val j2 = ev2.join(wins2, col("t") >= col("ws") && col("t") < col("we"))
       .join(perCust2, col("user_id") === col("o_custkey"))
-    var planned2: String = null
-    val jobs2 = countJobs(sNeg) { planned2 = j2.queryExecution.executedPlan.toString }
+    val (planned2, jobs2) =
+      JobMeter.during(sNeg.sparkContext)(j2.queryExecution.executedPlan.toString)
     assert(jobs2 >= 1L, "expected the planning-time span probe without the catalog")
     assert(planned2.contains("SortMergeJoin"),
       s"negative control: expected the static-estimate sort-merge join:\n${planned2.take(2500)}")
@@ -1377,17 +1353,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // interval relation (the SCD2 validity history) plans its range join
     // from STORED spans with no planning-time probe, exactly q276's
     // discipline on a table the old hand-staged body never covered.
-    def countJobs(s: org.apache.spark.sql.SparkSession)(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { n.incrementAndGet(); () }
-      }
-      s.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(s.sparkContext) }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val s = spark.newSession()
     graft.plans.RangeJoinRewrite.ensure(s)
     val store = queries.StatsStore.ensureStats(s, dir)
@@ -1401,8 +1366,7 @@ class PlanAuditSpec extends AnyFunSuite {
       .groupBy(pmod(col("o_orderkey"), lit(4)).cast("long").as("epoch"))
       .agg(count(lit(1)).as("n_orders"))
     val j = pts.join(hist, col("epoch") >= col("vf") && col("epoch") < col("vt1"))
-    var planned: String = null
-    val jobs = countJobs(s) { planned = j.queryExecution.executedPlan.toString }
+    val (planned, jobs) = JobMeter.during(s.sparkContext)(j.queryExecution.executedPlan.toString)
     assert(planned.contains("__rj_b"),
       s"catalog-width rewrite did not fire on the scd2 intervals:\n${planned.take(2000)}")
     assert(jobs == 0L, s"planning ran $jobs job(s) — the scd2 side was probed " +
@@ -1647,17 +1611,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(rows.contains(("join-elimination", "bailed")),
       s"join-elimination recorded no near-miss: $rows")
     // zero-job read: plan one diag-enabled shape, then collect the frame
-    def countJobs(s: org.apache.spark.sql.SparkSession)(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { n.incrementAndGet(); () }
-      }
-      s.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(s.sparkContext) }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val s = spark.newSession()
     graft.plans.SketchStats.ensure(s)
     graft.plans.RuleDiag.clear(s)
@@ -1667,8 +1620,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val dim = Tables.orders(s, dir).groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_prio"))
     Tables.orders(s, dir).join(dim, "o_orderpriority").queryExecution.optimizedPlan
-    var read: Array[org.apache.spark.sql.Row] = null
-    val jobs = countJobs(s) { read = graft.plans.RuleDiag.frame(s).collect() }
+    val (read, jobs) = JobMeter.during(s.sparkContext)(graft.plans.RuleDiag.frame(s).collect())
     assert(read.exists(r => r.getString(0) == "broadcast-flip" && r.getString(1) == "fired"),
       s"diag frame missing the flip record: ${read.mkString(",")}")
     assert(jobs == 0L, s"reading the diagnostics buffer ran $jobs job(s)")

@@ -200,17 +200,6 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     // ts-typed validity table gets catalog-width planning without a hand
     // unix_micros cast anywhere.
     import org.apache.spark.sql.functions._
-    def countJobs(s: org.apache.spark.sql.SparkSession)(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { n.incrementAndGet(); () }
-      }
-      s.sparkContext.addSparkListener(l)
-      try { body; org.apache.spark.graftbridge.ListenerBridge.drain(s.sparkContext) }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val s = spark.newSession()
     RangeJoinRewrite.ensure(s)
     import s.implicits._
@@ -244,8 +233,7 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     graft.plans.StatsCatalog.spans(s, root) // warm the fresh generation
     val iv2 = s.read.parquet(s"$gen2/validity2.parquet")
     val j2 = pts.join(iv2, col("t") >= col("vf") && col("t") < col("vt"))
-    var planned2: String = null
-    val jobs2 = countJobs(s) { planned2 = j2.queryExecution.executedPlan.toString }
+    val (planned2, jobs2) = JobMeter.during(s.sparkContext)(j2.queryExecution.executedPlan.toString)
     assert(planned2.contains("__rj_b"),
       s"ts-typed bare-attribute range join did not rewrite:\n${planned2.take(1500)}")
     assert(jobs2 == 0L,
