@@ -10,6 +10,11 @@ import java.nio.file.{Files, Paths}
   *   plans <outdir> <tag> <q>...  write each query's `explain("formatted")`
   *                              to `<outdir>/<q>_<tag>.txt`
   *   show <q>...                print each query's rows
+  *   sql <file>...              run each file's SQL text 3× through
+  *                              [[Serve]]'s own request path: `rows=`,
+  *                              wall, Spark `jobs=`; the views are the
+  *                              Serve workload's (`v_packages`, `v_files`,
+  *                              `v_lineitem`, `v_res_edges`, `v_pkg_script`)
   *   smoke                      count [[SparkEntry.entry]] (sf0.001)
   */
 object Dev {
@@ -45,11 +50,28 @@ object Dev {
           println(s"=== $name @ $dir")
           query(name).show(500, truncate = false)
         }
+      case "sql" :: files =>
+        // the session Serve hosts: its functions, views and plan rules
+        graft.functions.GraftFunctions.ensureRegistered(spark)
+        Tables.packages(spark, dir).createOrReplaceTempView("v_packages")
+        Tables.files(spark, dir).createOrReplaceTempView("v_files")
+        Tables.lineitem(spark, dir).createOrReplaceTempView("v_lineitem")
+        // q180 registers v_res_edges, q198 v_pkg_script and scripting
+        Seq("q180_sql_recursive_closure", "q198_sql_scripting").foreach(query)
+        graft.plans.BoundedRecursion.ensure(spark)
+        for (file <- files; _ <- 1 to 3) {
+          val text = new String(Files.readAllBytes(Paths.get(file)), "UTF-8")
+          val t0 = System.nanoTime()
+          val (rows, jobs) = JobMeter.during(spark.sparkContext)(
+            Serve.answer(spark, text, Serve.DefaultMaxRows))
+          val t = (System.nanoTime() - t0) / 1e9
+          println(f"SQL $file rows=${rows.length} t=$t%.3f jobs=$jobs")
+        }
       case "smoke" :: Nil =>
         println(s"SMOKE rows=${SparkEntry.entry(spark).count()}")
       case _ =>
         System.err.println(
-          "usage: probe <q>... | plans <outdir> <tag> <q>... | show <q>... | smoke")
+          "usage: probe <q>... | plans <outdir> <tag> <q>... | show <q>... | sql <file>... | smoke")
         spark.stop()
         sys.exit(2)
     }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Deliberately JDK-only (`com.sun.net.httpserver`, same as the ingest
   * loopback tests): no server framework, no new dependency. The hosting
-  * session decides which views/functions exist; the endpoint adds exactly
-  * two policies of its own:
+  * session decides which views/functions exist; the endpoint adds these
+  * policies of its own:
   *   - results are capped at `maxRows` via `limit()` IN THE PLAN — the
   *     cap prunes before collection, so an accidental `SELECT *` over the
   *     corpus cannot OOM the driver;
@@ -28,7 +28,13 @@ import org.apache.spark.sql.SparkSession
   *     its own Spark scheduler pool, so under `spark.scheduler.mode=FAIR`
   *     (the session config Verify/Bench/tests run with) concurrent
   *     queries time-slice the cluster instead of queueing FIFO behind
-  *     the first big scan.
+  *     the first big scan;
+  *   - a depth-bounded recursive CTE (the q180 closure shape, `WHERE
+  *     r.depth < 6`) runs as ONE plan: [[start]] installs
+  *     [[graft.plans.BoundedRecursion]], which unrolls a `WITH RECURSIVE`
+  *     bounded by literals into a union of its levels (about 6 Spark jobs
+  *     instead of `UnionLoopExec`'s 32) and leaves every other recursion
+  *     to Spark.
   */
 object Serve {
   final case class Running(server: HttpServer, port: Int,
@@ -69,11 +75,20 @@ object Serve {
     reply(exchange, status, "application/json",
       s"""{"error":${jsonQuote(message)}}""".getBytes("UTF-8"))
 
+  /** Rows a request returns at most, unless [[start]] is told otherwise. */
+  val DefaultMaxRows = 1000
+
+  /** One request's rows as JSON lines: the SQL text, capped at `maxRows`
+    * inside the plan. */
+  private[graft] def answer(spark: SparkSession, sqlText: String, maxRows: Int): Array[String] =
+    spark.sql(sqlText).limit(maxRows).toJSON.collect()
+
   /** Start serving `spark`'s SQL surface on 127.0.0.1:`port` (0 = pick a
     * free port). The caller owns the lifecycle via [[Running.stop]].
     */
-  def start(spark: SparkSession, port: Int = 0, maxRows: Int = 1000,
+  def start(spark: SparkSession, port: Int = 0, maxRows: Int = DefaultMaxRows,
       workers: Int = 8): Running = {
+    graft.plans.BoundedRecursion.ensure(spark)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val exec = java.util.concurrent.Executors.newFixedThreadPool(workers)
     server.setExecutor(exec)
@@ -85,7 +100,7 @@ object Serve {
         spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           s"serve-${Thread.currentThread().getId}")
         val sqlText = new String(exchange.getRequestBody.readAllBytes(), "UTF-8")
-        try jsonl(exchange, spark.sql(sqlText).limit(maxRows).toJSON.collect())
+        try jsonl(exchange, answer(spark, sqlText, maxRows))
         catch { case e: Throwable => error(exchange, 400, e.getMessage) }
       } finally exchange.close()
     })

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import org.apache.spark.sql.functions.col
 
 /** Shared fixed-point driver for the iterative operator family (Closure,
   * TemporalReach, MaximalIndependentSet, ShortestPath, KCore, LabelProp,
@@ -28,10 +28,11 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
   * and use `(f, s) => s` as absorb.
   *
   * ONE driver job per round (VERDICT r10 item 1): the frontier is
-  * checkpointed LAZILY and the convergence signal is an aggregate over it
-  * — the single action both materializes the checkpoint blocks and
-  * returns the signal, where the old shape paid an eager-cut job AND a
-  * separate `isEmpty` job. The signal is picked per operator family:
+  * checkpointed LAZILY and the convergence signal is a count or sum over
+  * its RDD ([[signal]], one result-stage job) — the single action both
+  * materializes the checkpoint blocks and returns the signal, where the
+  * old shape paid an eager-cut job AND a separate `isEmpty` job. The
+  * signal is picked per operator family:
   *
   *  - [[Iterate.NonEmpty]] — `count(frontier) > 0` (BFS/relaxation
   *    frontiers: Closure, ShortestPath, TemporalReach, Luby MIS).
@@ -97,6 +98,16 @@ object Iterate {
     out.toSeq
   }
 
+  /** The convergence signal as ONE result-stage job over `frontier`'s RDD:
+    * its row count, or the sum of the `flag` column read as long with null
+    * as 0. `Dataset.count` and `agg().head()` plan a single-partition
+    * exchange, which AQE runs as a job of its own before the result job. */
+  private[operators] def signal(frontier: DataFrame, flag: Option[String]): Long = flag match {
+    case None => frontier.queryExecution.toRdd.count()
+    case Some(c) => frontier.select(col(c).cast("long")).queryExecution.toRdd
+      .map(r => if (r.isNullAt(0)) 0L else r.getLong(0)).fold(0L)(_ + _)
+  }
+
   /** Run `round` from (frontier0, state0) until the convergence signal
     * stops it or `maxRounds` rounds elapse; returns the final state.
     *
@@ -136,7 +147,7 @@ object Iterate {
     var live = conv match {
       case FixedRounds => true
       case CountStable =>
-        prevCount = frontier0.count(); prevCount > 0
+        prevCount = signal(frontier0, None); prevCount > 0
       case _ => !frontier0.isEmpty
     }
     while (r < maxRounds && live) {
@@ -151,14 +162,13 @@ object Iterate {
         case NonEmpty =>
           // uncut probe frontiers keep the early-exit isEmpty (nothing to
           // materialize); cut frontiers need the full count scan anyway
-          live = if (cutFrontier) frontier.count() > 0L else !frontier.isEmpty
+          live = if (cutFrontier) signal(frontier, None) > 0L else !frontier.isEmpty
         case CountStable =>
-          val n = frontier.count()
+          val n = signal(frontier, None)
           live = n != prevCount && n > 0L
           prevCount = n
         case FlagSum(c) =>
-          live = frontier.agg(coalesce(sum(col(c).cast("long")), lit(0L)))
-            .head().getLong(0) > 0L
+          live = signal(frontier, Some(c)) > 0L
         case FixedRounds => ()
       }
       state = absorb(frontier, s1)

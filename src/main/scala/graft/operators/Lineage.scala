@@ -47,7 +47,7 @@ object Lineage {
     * probe every round: pay the write once, before the first round). */
   def cutHash(df: DataFrame, numPartitions: Int, cols: String*): DataFrame = {
     val out = cutLazyHash(df, numPartitions, cols: _*)
-    out.count()
+    out.queryExecution.toRdd.count() // one job; Dataset.count adds an exchange job
     out
   }
 }

@@ -112,10 +112,13 @@ object Events {
             col("us") - col("prev_us") > 1800000000L, 1).otherwise(0))
         .withColumn("sess_id", sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
       val wSess = Window.partitionBy("user_id", "sess_id").orderBy("ts", "event_id")
-      val trans = ev.withColumn("nxt", lead("event_type", 1).over(wSess))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("event_type").as("a"), col("nxt").as("b"))
-        .agg(count(lit(1)).as("c"))
+      // built once: the p and types cuts below both read it, and each
+      // would otherwise re-run the scan, both windows and the aggregate
+      val trans = graft.operators.Lineage.cut(
+        ev.withColumn("nxt", lead("event_type", 1).over(wSess))
+          .filter(col("nxt").isNotNull)
+          .groupBy(col("event_type").as("a"), col("nxt").as("b"))
+          .agg(count(lit(1)).as("c")))
       val rowTot = trans.groupBy("a").agg(sum("c").as("ca"))
       val p = graft.operators.Lineage.cut(
         trans.join(rowTot, "a")

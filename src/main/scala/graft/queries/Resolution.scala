@@ -1388,10 +1388,12 @@ object Resolution {
     },
 
     // Pure-SQL RECURSIVE closure — Spark 4's native `WITH RECURSIVE`
-    // (analyzed by ResolveWithCTE, executed by UnionLoopExec): the
-    // dependency walk arrives as SQL TEXT over a registered edge view,
-    // with NO driver-side loop anywhere — the engine itself iterates the
-    // anchor∪step plan until the frontier empties. This is the SQL-parity
+    // (analyzed by ResolveWithCTE): the dependency walk arrives as SQL
+    // TEXT over a registered edge view. Spark's UnionLoopExec would run
+    // it as a driver loop, one query per level until the frontier
+    // empties; the literal bound `r.depth < 6` lets
+    // plans.BoundedRecursion unroll it into ONE plan, the union of the
+    // anchor and six step levels, with no driver-side loop. This is the SQL-parity
     // twin of q33's DataFrame BFS and the second half of the q132 ad-hoc
     // endpoint story: a reference user can POST a recursive graph query
     // as text. Depth-bounded walk enumeration (the recursion is UNION ALL
@@ -1399,6 +1401,7 @@ object Resolution {
     // `n_walks` — the bounded-walk count — is judged alongside min-depth
     // reachability. Edge universe is the memoized resolution frame.
     "q180_sql_recursive_closure" -> { (s, dir) =>
+      graft.plans.BoundedRecursion.ensure(s)
       resolvedEdges(s, dir).createOrReplaceTempView("v_res_edges")
       s.sql("""
         WITH RECURSIVE reach AS (
