@@ -6,15 +6,17 @@ import java.nio.file.{Files, Paths}
   * and the fixture in `SPARK_GRAFT_SF_DIR` (default sf0.1):
   *
   *   probe <q>...               run each query 3×: `rows=`, wall, Spark
-  *                              `jobs=`, then its `Iterate` rounds
+  *                              `jobs=` and `stages=`, then its
+  *                              `Iterate` rounds
   *   plans <outdir> <tag> <q>...  write each query's `explain("formatted")`
   *                              to `<outdir>/<q>_<tag>.txt`
   *   show <q>...                print each query's rows
   *   sql <file>...              run each file's SQL text 3× through
   *                              [[Serve]]'s own request path: `rows=`,
-  *                              wall, Spark `jobs=`; the views are the
-  *                              Serve workload's (`v_packages`, `v_files`,
-  *                              `v_lineitem`, `v_res_edges`, `v_pkg_script`)
+  *                              wall, Spark `jobs=` and `stages=`; the
+  *                              views are the Serve workload's
+  *                              (`v_packages`, `v_files`, `v_lineitem`,
+  *                              `v_res_edges`, `v_pkg_script`)
   *   smoke                      count [[SparkEntry.entry]] (sf0.001)
   */
 object Dev {
@@ -28,9 +30,9 @@ object Dev {
         graft.operators.Iterate.setRecording(true)
         for (name <- names; _ <- 1 to 3) {
           val t0 = System.nanoTime()
-          val (n, jobs) = JobMeter.during(spark.sparkContext)(query(name).count())
+          val (n, jobs, stages) = JobMeter.withStages(spark.sparkContext)(query(name).count())
           val t = (System.nanoTime() - t0) / 1e9
-          println(f"PROBE $name rows=$n t=$t%.3f jobs=$jobs")
+          println(f"PROBE $name rows=$n t=$t%.3f jobs=$jobs stages=$stages")
           graft.operators.Iterate.drainRounds().foreach(r =>
             println(f"  ROUND ${r.label}%s ${r.round}%d ${r.ms / 1000.0}%.3f jobs=${r.jobs}%d"))
         }
@@ -62,10 +64,10 @@ object Dev {
         for (file <- files; _ <- 1 to 3) {
           val text = new String(Files.readAllBytes(Paths.get(file)), "UTF-8")
           val t0 = System.nanoTime()
-          val (rows, jobs) = JobMeter.during(spark.sparkContext)(
+          val (rows, jobs, stages) = JobMeter.withStages(spark.sparkContext)(
             Serve.answer(spark, text, Serve.DefaultMaxRows))
           val t = (System.nanoTime() - t0) / 1e9
-          println(f"SQL $file rows=${rows.length} t=$t%.3f jobs=$jobs")
+          println(f"SQL $file rows=${rows.length} t=$t%.3f jobs=$jobs stages=$stages")
         }
       case "smoke" :: Nil =>
         println(s"SMOKE rows=${SparkEntry.entry(spark).count()}")

@@ -141,6 +141,36 @@ object IndexStore {
     }
   }
 
+  /** Write a driver-held frame to `dir` as one parquet file on the calling
+    * thread, with no Spark job: the rows of its `LocalTableScanExec` go
+    * through Spark's own parquet writer, so the file (name, codec, schema,
+    * footer) is the one `df.coalesce(1).write.parquet(dir)` leaves, minus
+    * the `_SUCCESS` marker. Any other plan throws `IllegalArgumentException`
+    * before `dir` is touched: this never pulls a real relation to the driver. */
+  private[graft] def writeLocal(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val plan = df.queryExecution.executedPlan
+    val local = plan match {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec => l
+      case other => throw new IllegalArgumentException(
+        s"writeLocal needs a driver-held frame (LocalTableScanExec), got ${other.nodeName}")
+    }
+    val s = df.sparkSession
+    val job = Job.getInstance(s.sessionState.newHadoopConf())
+    val schema = local.schema
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(s, job, Map.empty, schema)
+    val uuid = java.util.UUID.randomUUID().toString
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+    Files.createDirectories(Paths.get(dir))
+    val writer = factory.newInstance(
+      s"$dir/part-00000-$uuid-c000${factory.getFileExtension(ctx)}", schema, ctx)
+    try local.executeCollect().foreach(writer.write)
+    finally writer.close()
+  }
+
   /** Delete `f` and everything under it, best effort. */
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

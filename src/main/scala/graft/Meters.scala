@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 /** Wall-clock meter for the STORE-BUILD phase inside lifecycle-class
   * judged queries (VERDICT r16 item 6): queries like q287/q313/q315 build
@@ -50,40 +51,58 @@ object LifecycleMeter {
   }
 }
 
-/** The Spark jobs started on a context: the load-independent cost measure
-  * (wall clock on a shared box swings 3×). Read by Bench's
-  * bench_jobs.json, `Dev probe`, `Iterate`'s per-round counts and the
-  * zero-job planning pins in the tests.
+/** The Spark jobs started and stages completed on a context: the
+  * load-independent cost measure (wall clock on a shared box swings 3×).
+  * Read by Bench's bench_jobs.json, `Dev probe`/`Dev sql`, `Iterate`'s
+  * per-round counts and the zero-job planning pins in the tests. Stages
+  * sit beside jobs because under AQE one query's shuffle and broadcast
+  * stages each run as their own job, while a stage a later job reuses is
+  * skipped and never completes again.
   *
-  * One started-job counter per `SparkContext`, registered on first use and
-  * dropped on `onApplicationEnd`, so a stopped context is not retained.
-  * `onJobStart` events arrive asynchronously, so every read drains the
-  * listener bus first; otherwise a job delivered late would land in the
-  * next sample (ADVICE r11). A delta covers every job on the context
-  * between its two samples, including other threads' jobs.
+  * One listener per `SparkContext`, registered on first use and dropped
+  * on `onApplicationEnd`, so a stopped context is not retained. Listener
+  * events arrive asynchronously, so every read drains the listener bus
+  * first; otherwise an event delivered late would land in the next sample
+  * (ADVICE r11). A delta covers everything on the context between its two
+  * samples, including other threads' jobs.
   */
 object JobMeter {
-  private val counters = new ConcurrentHashMap[SparkContext, AtomicLong]()
+  private final class Counts { val jobs = new AtomicLong(); val stages = new AtomicLong() }
+  private val counters = new ConcurrentHashMap[SparkContext, Counts]()
 
-  /** Jobs started on `sc` since its counter was registered. */
-  def total(sc: SparkContext): Long = {
+  private def counts(sc: SparkContext): Counts = {
     val c = counters.computeIfAbsent(sc, { sc0 =>
-      val n = new AtomicLong()
+      val n = new Counts
       sc0.addSparkListener(new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          { n.jobs.incrementAndGet(); () }
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          { n.stages.incrementAndGet(); () }
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
           { counters.remove(sc0); () }
       })
       n
     })
     ListenerBridge.drain(sc)
-    c.get()
+    c
   }
+
+  /** Jobs started on `sc` since its listener was registered. */
+  def total(sc: SparkContext): Long = counts(sc).jobs.get()
 
   /** Run `body`; returns its value and the jobs started on `sc` meanwhile. */
   def during[T](sc: SparkContext)(body: => T): (T, Long) = {
-    val j0 = total(sc)
+    val (out, jobs, _) = withStages(sc)(body)
+    (out, jobs)
+  }
+
+  /** Run `body`; returns its value, the jobs started and the stages
+    * completed on `sc` meanwhile. */
+  def withStages[T](sc: SparkContext)(body: => T): (T, Long, Long) = {
+    val c0 = counts(sc)
+    val (j0, s0) = (c0.jobs.get(), c0.stages.get())
     val out = body
-    (out, total(sc) - j0)
+    val c1 = counts(sc)
+    (out, c1.jobs.get() - j0, c1.stages.get() - s0)
   }
 }

@@ -46,13 +46,14 @@ object Hits {
     val consts = broadcast(nodes.agg(expr(s"$scale div count(1)").as("__init")))
     val hub0 = nodes.crossJoin(consts).select(col("name"), col("__init").as("hub"))
     val auth0 = hub0.select(col("name"), col("hub").as("auth"))
-    // fixed half-iteration count, NO per-round driver barrier (VERDICT r10
-    // item 1): FixedRounds skips the convergence action entirely and the
-    // per-step cuts are LAZY — each normalized vector still flattens to a
-    // LogicalRDD (so the doubled consumption never doubles the plan), but
-    // the blocks materialize when the caller's terminal action pipelines
-    // all `iters` rounds as one job — the PageRank economics on the
-    // shared harness. The raw-sum frame is ALSO lazily cut: the
+    // fixed half-iteration count, NO per-round convergence action (VERDICT
+    // r10 item 1): FixedRounds skips the signal job and the per-step cuts
+    // are LAZY — each normalized vector still flattens to a LogicalRDD (so
+    // the doubled consumption never doubles the plan). Each cut still runs
+    // its frame's shuffle and broadcast stages as jobs during the round
+    // (`toRdd` of an adaptive plan); only the checkpoint write waits for
+    // the next round or the terminal action. The raw-sum frame is ALSO
+    // lazily cut: the
     // normalization consumes it twice (values + total), and without the
     // cut the broadcast-total build re-executes the whole join + agg.
     val (auth, hub) = Iterate.fixedPoint("hits", nodes, (auth0, hub0), iters,

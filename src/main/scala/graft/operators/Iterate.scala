@@ -45,11 +45,14 @@ import org.apache.spark.sql.functions.col
   *    label-improved flag, the star rounds' set-difference flag), so
   *    change detection rides the same materialization scan.
   *  - [[Iterate.FixedRounds]] — NO convergence action at all: loops with
-  *    a contract-fixed round count (Hits, LabelProp) never read a signal,
-  *    so each round only compiles its plan (the lazy checkpoint mark
-  *    keeps the logical plan flat) and the caller's terminal action
-  *    executes the whole chain as one pipelined job — the PageRank
-  *    economics, reached without giving up the shared harness.
+  *    a contract-fixed round count (Hits, LabelProp) never read a signal.
+  *    That removes the per-round signal job, not the round's other jobs:
+  *    cutting a round's frames ([[Lineage.cutLazy]]/`cutLazyHash`) calls
+  *    `toRdd` on an adaptive plan, which runs every shuffle and broadcast
+  *    stage of the frame as its own job before it returns. Only each
+  *    cut's last stage (the checkpoint write) waits, and it runs inside
+  *    the next consumer's first stage or the terminal action. The chain
+  *    is not one pipelined job: q173's four Hits rounds run about 26 jobs.
   *
   * Timing: every round's wall ms and Spark jobs ([[graft.JobMeter]]) are
   * recorded under `label` when recording is enabled ([[setRecording]] —
@@ -57,8 +60,8 @@ import org.apache.spark.sql.functions.col
   * never grows unread, ADVICE r10);
   * [[drainRounds]] hands the log to Bench, which writes it beside
   * bench_passes.json so the barrier floor is measured, not inferred.
-  * FixedRounds rounds record plan-compile time only — their barrier is
-  * gone, which is the honest number.
+  * FixedRounds rounds record the jobs their cuts run (their shuffle and
+  * broadcast stages); only the convergence barrier is gone.
   */
 object Iterate {
   final case class RoundStat(label: String, round: Int, ms: Double, jobs: Long = -1L)
@@ -74,9 +77,9 @@ object Iterate {
     * the change indicator as a 0/1 (castable-to-long) column. */
   final case class FlagSum(column: String) extends Convergence
   /** No convergence signal — run exactly `maxRounds` rounds with no
-    * per-round action; the frontier still gets a LAZY lineage cut so the
-    * logical plan stays flat while the terminal action pipelines all
-    * rounds into one job. */
+    * per-round signal action; the frontier still gets a LAZY lineage cut
+    * so the logical plan stays flat. Under AQE each cut still runs its
+    * frame's shuffle and broadcast stages as jobs during the round. */
   case object FixedRounds extends Convergence
 
   private val roundLog = new java.util.concurrent.ConcurrentLinkedQueue[RoundStat]()

@@ -128,9 +128,10 @@ object Events {
       val nT = broadcast(types.agg(count(lit(1)).as("nt")))
       var pi = types.crossJoin(nT).select(col("t"), expr("1000000000000 div nt").as("pi"))
       // LAZY cuts: each iterate is consumed exactly once by the next, so
-      // the whole 8-step chain pipelines into the terminal action (the
-      // PageRank economics) — an eager cut here paid a count job per
-      // iteration for a <=5-row vector
+      // no step pays a count job for its <=5-row vector. The chain is not
+      // one job: each cut's `toRdd` runs that step's shuffle and broadcast
+      // stages as jobs at cut time; only its checkpoint write waits for
+      // the next step or the terminal action
       for (_ <- 1 to 8) {
         pi = graft.operators.Lineage.cutLazy(
           pi.join(p, pi("t") === p("a"))

@@ -15,7 +15,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * throughout the fixed-point family.
   *
   * This bridge rebuilds the cut frame's LogicalRDD with an EXPLICIT
-  * HashPartitioning over the named output columns. The claim is sound iff
+  * HashPartitioning over the named output columns.
+  *
+  * What runs when: `qe.toRdd` below runs every shuffle and broadcast stage
+  * of the frame's adaptive plan, each as its own job, before the cut
+  * returns; only the last stage (the checkpoint write) waits for the first
+  * action over the cut frame. The claim is sound iff
   * the frame's physical layout really is that partitioning — which the
   * callers guarantee by ending the plan in `repartition(n, cols)` (pinned
   * REPARTITION_BY_NUM: AQE never coalesces user-numbered repartitions)

@@ -64,4 +64,13 @@ class MetersSpec extends AnyFunSuite {
     val (_, planJobs) = JobMeter.during(sc)(df.queryExecution.executedPlan)
     assert(planJobs == 0L, s"planning ran $planJobs job(s)")
   }
+
+  test("JobMeter.withStages counts completed stages beside jobs") {
+    val sc = spark.sparkContext
+    val (_, jobs, stages) = JobMeter.withStages(sc)(spark.range(10).collect())
+    assert((jobs, stages) == ((1L, 1L)), s"range(10).collect(): $jobs job(s), $stages stage(s)")
+    // the map stage runs in its own job; the result job skips it
+    val (_, cJobs, cStages) = JobMeter.withStages(sc)(spark.range(10).count())
+    assert((cJobs, cStages) == ((2L, 2L)), s"range(10).count(): $cJobs job(s), $cStages stage(s)")
+  }
 }
