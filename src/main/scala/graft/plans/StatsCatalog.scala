@@ -1,14 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.col
 
-/** Shared plumbing for optimizer rules that consult the persisted stats
-  * store ([[SketchStats]]'s NDV broadcast flip, [[RangeJoinRewrite]]'s
+/** The one reader of the stats-generation format, and the shared plumbing
+  * for optimizer rules that consult the persisted stats store
+  * ([[SketchStats]]'s NDV broadcast flip, [[RangeJoinRewrite]]'s
   * span-derived bucket width): one generation-aware resolver, one memo
   * discipline, one re-entrancy guard — instead of each rule re-learning
   * the same three lessons.
   *
+  *  - **One reader per kind**: each managed table is one [[Kind]] — its
+  *    row reader and its rows → catalog-map derivation. The planner's cold
+  *    reads, StatsStore's CAS base read and its publish-time primer all use
+  *    them, so the planner serves exactly what the writer recorded.
   *  - **Generation pinning** (VERDICT r11 item 3): a stats dir that is an
   *    [[graft.IndexStore]] root resolves through its `LATEST` manifest, so
   *    a planner racing a stats rebuild reads only the old COMPLETE
@@ -115,11 +121,11 @@ object StatsCatalog {
     * Spark jobs instead of one read-parquet-and-collect job per kind.
     * This is the dominant fixed cost of the ~40 lifecycle-class judged
     * queries, each of which builds a scratch store per invocation and then
-    * plans against it. `values` maps kind → exactly the object the kind's
-    * reader would have produced (Round20Spec pins byte-equality
-    * against a forced re-read); `base` is the generation the content
-    * describes, so the TTL-expiry revalidation and foreign-publish
-    * detection behave exactly as for read-backed entries. */
+    * plans against it. `values` maps kind → the kind's [[Kind.derive]] of
+    * the rows it published, the same derivation a cold read applies
+    * (Round20Spec pins equality against a forced re-read); `base` is the
+    * generation the content describes, so the TTL-expiry revalidation and
+    * foreign-publish detection behave exactly as for read-backed entries. */
   def prime(dir: String, base: String, values: Map[String, AnyRef]): Unit =
     values.foreach { case (kind, v) => stamp((kind, dir), v, base) }
 
@@ -127,14 +133,7 @@ object StatsCatalog {
     * kind from parquet, returning the maps a cold reader computes. */
   private[graft] def rereadAll(spark: SparkSession, dir: String): Map[String, AnyRef] = {
     invalidate(dir)
-    Map(
-      "column_ndv" -> ndvBoth(spark, dir),
-      "table_rows" -> rows(spark, dir),
-      "column_hist" -> hist(spark, dir),
-      "column_hist_counts" -> histCounts(spark, dir),
-      "table_src_bytes" -> srcBytes(spark, dir),
-      "column_span" -> spans(spark, dir),
-      "column_fanout" -> fanout(spark, dir))
+    Kinds.map(k => k.name -> (k.cached(spark, dir): AnyRef)).toMap
   }
 
   /** Snapshot of `dir`'s currently memoized kinds (test seam). */
@@ -165,43 +164,92 @@ object StatsCatalog {
     case _ => None
   }
 
+  /** One managed kind of the stats-generation format: its table name
+    * under a generation, whether every generation carries it, the columns
+    * its reader selects, the row parser, and the derivation from rows to
+    * the map the catalog serves. The cold read ([[cached]]), the CAS base
+    * read (StatsStore.readStatsGen) and the publish-time primer
+    * (StatsStore.catalogMapsOf) all go through [[read]] and [[derive]], so
+    * primed and read values come from one definition. */
+  private[graft] final class Kind[R, M <: AnyRef](val name: String, required: Boolean,
+      cols: String*)(parse: Row => R)(val derive: Seq[R] => M) {
+    /** `$base/<name>` as rows. A required kind's failed read throws; an
+      * optional kind a generation lacks reads as no rows (absence is an
+      * answer, cached like any other, not a failure to retry on every
+      * planning). A column the table lacks is left out of the select:
+      * only `column_ndv`'s trailing `regs` may be missing (the regs-less
+      * layout of constructed and legacy stores); any other kind's parser
+      * then fails on the short row, a failed read. */
+    def read(spark: SparkSession, base: String): Seq[R] =
+      if (!required && !new java.io.File(s"$base/$name").exists()) Nil
+      else {
+        val df = spark.read.parquet(s"$base/$name")
+        df.select(cols.filter(df.columns.contains).map(col): _*)
+          .collect().toSeq.map(parse)
+      }
+
+    /** The memoized catalog map of the stats dir `dir`. */
+    def cached(spark: SparkSession, dir: String): M =
+      cachedRead(name, dir)(derive(Nil))(base => derive(read(spark, base)))
+  }
+
+  /** Per-(table, column) NDV: the stored estimate and its [[refineNdv]]
+    * refinement. Rows are (tbl, col, ndv_est, regs). */
+  private[graft] val Ndv =
+    new Kind("column_ndv", required = true, "tbl", "col", "ndv_est", "regs")(r =>
+      (r.getString(0), r.getString(1), r.getLong(2),
+        if (r.length > 3 && !r.isNullAt(3)) Some(r.getSeq[Long](3).toSeq) else None))(
+      _.map { case (t, c, est, regs) => (t, c) -> (est, refineNdv(est, regs)) }.toMap)
+  private[graft] val Rows =
+    new Kind("table_rows", required = true, "tbl", "row_count")(r =>
+      (r.getString(0), r.getLong(1)))(_.toMap)
+  private[graft] val Hist =
+    new Kind("column_hist", required = false, "tbl", "col", "bucket", "up_to", "cum_cnt")(r =>
+      (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))(
+      _.groupBy(r => (r._1, r._2))
+        .map { case (k, vs) => k -> vs.sortBy(_._3).map(r => (r._4, r._5)).toIndexedSeq })
+  private[graft] val HistCounts =
+    new Kind("column_hist_counts", required = false, "tbl", "col", "v", "cnt")(r =>
+      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))(
+      _.groupBy(r => (r._1, r._2)).map { case (k, vs) => k -> vs.map(r => r._3 -> r._4).toMap })
+  private[graft] val SrcBytes =
+    new Kind("table_src_bytes", required = false, "tbl", "src_bytes")(r =>
+      (r.getString(0), r.getLong(1)))(_.toMap)
+  private[graft] val Spans =
+    new Kind("column_span", required = false,
+        "tbl", "lo_col", "hi_col", "med_span", "max_span")(r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))(
+      _.map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap)
+  private[graft] val Fanout =
+    new Kind("column_fanout", required = false, "tbl", "col", "avg_len", "max_len")(r =>
+      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))(
+      _.map(r => (r._1, r._2) -> (r._3, r._4)).toMap)
+
+  /** Every managed kind. */
+  private[graft] val Kinds: Seq[Kind[_, _ <: AnyRef]] =
+    Seq(Ndv, Rows, Hist, HistCounts, SrcBytes, Spans, Fanout)
+
   /** Per-(table, lo-col, hi-col) interval span stats: (median, max), in
     * the column's native Long units (epoch micros for lowered timestamp
     * columns — the builder stores micros for those). */
   def spans(spark: SparkSession, dir: String): Map[(String, String, String), (Long, Long)] =
-    cachedRead("column_span", dir)(Map.empty[(String, String, String), (Long, Long)]) { base =>
-      // a store without a span table resolves to an EMPTY map and caches
-      // it — spans are optional coverage; absence is an answer, not a
-      // failure to retry (and error-log) on every planning
-      if (!new java.io.File(s"$base/column_span").exists())
-        Map.empty[(String, String, String), (Long, Long)]
-      else spark.read.parquet(s"$base/column_span")
-        .select("tbl", "lo_col", "hi_col", "med_span", "max_span").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-          (r.getLong(3), r.getLong(4))).toMap
-    }
+    Spans.cached(spark, dir)
 
-  /** Per-(table, column) NDV estimates from the persisted HLL registers.
-    *
-    * Small-range correction at READ time (r15): the stored integer
-    * estimator deliberately has no linear-counting branch (ln() is not
-    * bit-reproducible across engines, and the oracle re-derives every
-    * stored value), so tiny cardinalities FLOOR at ~45 — fine for
-    * broadcast upper bounds, but it inflates a composite key's ∏NDV ~9×
-    * per small component and starves the eager-aggregation fanout. The
-    * catalog read is planning-time JVM math where reproducibility does
-    * not bind, so estimates below the accurate regime apply the standard
-    * small-range correction — linear counting over the empty-register
-    * count, m·ln(m/V) (Whang, Vander-Zanden & Taylor, ACM TODS 1990; the
-    * same correction HyperLogLog prescribes for its small range,
-    * Flajolet et al. 2007). Stored values stay floored and judged
-    * (q273); only the planner's view is corrected. Stores written
-    * without a `regs` column (constructed test fixtures) are served
-    * verbatim. */
-  /** The small-range refinement for one register row — ONE definition
-    * shared by the parquet reader below and the publish-time primer
-    * ([[prime]] / StatsStore.catalogMapsOf), so primed and read values can
-    * never drift. */
+  /** The small-range refinement of one stored NDV estimate, applied by the
+    * [[Ndv]] derivation (so the cold read and the publish-time primer
+    * share it). The stored integer estimator deliberately has no
+    * linear-counting branch (ln() is not bit-reproducible across engines,
+    * and the oracle re-derives every stored value), so tiny cardinalities
+    * FLOOR at ~45 — fine for broadcast upper bounds, but it inflates a
+    * composite key's ∏NDV ~9× per small component and starves the
+    * eager-aggregation fanout. The catalog is planning-time JVM math where
+    * reproducibility does not bind, so estimates below the accurate regime
+    * apply the standard small-range correction — linear counting over the
+    * empty-register count, m·ln(m/V) (Whang, Vander-Zanden & Taylor, ACM
+    * TODS 1990; the same correction HyperLogLog prescribes for its small
+    * range, Flajolet et al. 2007). Stored values stay floored and judged
+    * (q273); only the planner's view is corrected. Rows without registers
+    * (regs-less stores) are served verbatim. */
   private[graft] def refineNdv(est: Long, regs: Option[Seq[Long]]): Long =
     regs match {
       case Some(rs) if est < 100 =>
@@ -213,23 +261,9 @@ object StatsCatalog {
       case _ => est
     }
 
-  private def ndvBoth(spark: SparkSession, dir: String): Map[(String, String), (Long, Long)] =
-    cachedRead("column_ndv", dir)(Map.empty[(String, String), (Long, Long)]) { base =>
-      val df = spark.read.parquet(s"$base/column_ndv")
-      val hasRegs = df.schema.fieldNames.contains("regs")
-      val rows =
-        if (hasRegs) df.select("tbl", "col", "ndv_est", "regs")
-        else df.select("tbl", "col", "ndv_est")
-      rows.collect().map { r =>
-        val est = r.getLong(2)
-        val regs =
-          if (hasRegs && !r.isNullAt(3)) Some(r.getSeq[Long](3).toSeq) else None
-        (r.getString(0), r.getString(1)) -> (est, refineNdv(est, regs))
-      }.toMap
-    }
-
+  /** Per-(table, column) NDV estimates, small-range refined. */
   def ndv(spark: SparkSession, dir: String): Map[(String, String), Long] =
-    ndvBoth(spark, dir).map { case (k, (_, corrected)) => k -> corrected }
+    Ndv.cached(spark, dir).map { case (k, (_, corrected)) => k -> corrected }
 
   /** The UNCORRECTED stored estimates — the view broadcast decisions use
     * (ADVICE r15): the linear-counting correction is a point estimate that
@@ -240,38 +274,22 @@ object StatsCatalog {
     * bounds read this map; selectivity/fanout pricing — where the floor's
     * ~9× inflation starves the rewrite — reads the corrected [[ndv]]. */
   def ndvUpper(spark: SparkSession, dir: String): Map[(String, String), Long] =
-    ndvBoth(spark, dir).map { case (k, (raw, _)) => k -> raw }
+    Ndv.cached(spark, dir).map { case (k, (raw, _)) => k -> raw }
 
   /** Per-table exact row counts — with [[ndv]] these make the System-R
     * join-size estimate |A|·|B| / max(ndv(A.k), ndv(B.k)) computable
     * entirely from the catalog (the reorder consumer's inputs). */
   def rows(spark: SparkSession, dir: String): Map[String, Long] =
-    cachedRead("table_rows", dir)(Map.empty[String, Long]) { base =>
-      spark.read.parquet(s"$base/table_rows")
-        .select("tbl", "row_count").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    Rows.cached(spark, dir)
 
   /** Per-(table, column) equi-depth histogram: bucket upper boundaries
     * with their EXACT cumulative row counts, sorted ascending — the
     * range-predicate selectivity source (VERDICT r13 item 2; equality
     * pricing stops at 1/NDV, and a `col >= lit` dim filter priced at
-    * full table size misses every reorder it should win). A store
-    * without a `column_hist` table resolves to an EMPTY map and caches
-    * it (histograms are optional coverage — absence is an answer, not a
-    * failure to retry every planning). */
+    * full table size misses every reorder it should win). Optional
+    * coverage: a store without the table serves the empty map. */
   def hist(spark: SparkSession, dir: String): Map[(String, String), IndexedSeq[(Long, Long)]] =
-    cachedRead("column_hist", dir)(Map.empty[(String, String), IndexedSeq[(Long, Long)]]) { base =>
-      if (!new java.io.File(s"$base/column_hist").exists())
-        Map.empty[(String, String), IndexedSeq[(Long, Long)]]
-      else
-        spark.read.parquet(s"$base/column_hist")
-          .select("tbl", "col", "bucket", "up_to", "cum_cnt").collect()
-          .map(r => ((r.getString(0), r.getString(1)), (r.getInt(2), r.getLong(3), r.getLong(4))))
-          .groupBy(_._1)
-          .map { case (k, vs) =>
-            k -> vs.map(_._2).sortBy(_._1).map(t => (t._2, t._3)).toIndexedSeq }
-    }
+    Hist.cached(spark, dir)
 
   /** Per-(table, column) PER-VALUE counters — the O(delta) histogram
     * maintenance kind, served to the planner as an EXACT equality/IN
@@ -279,20 +297,10 @@ object StatsCatalog {
     * whose lowered value is v over the cataloged snapshot (timestamps
     * lower to day-END micros, integral domains stay raw), so `col = lit`
     * prices at the literal's counter mass and an IN-list at the sum of
-    * member masses — exact bounds, not 1/NDV estimates. A store without
-    * the counter kind resolves to an EMPTY map and caches it (counters
-    * are optional coverage; absence is an answer). */
+    * member masses — exact bounds, not 1/NDV estimates. Optional
+    * coverage. */
   def histCounts(spark: SparkSession, dir: String): Map[(String, String), Map[Long, Long]] =
-    cachedRead("column_hist_counts", dir)(
-      Map.empty[(String, String), Map[Long, Long]]) { base =>
-      if (!new java.io.File(s"$base/column_hist_counts").exists())
-        Map.empty[(String, String), Map[Long, Long]]
-      else spark.read.parquet(s"$base/column_hist_counts")
-        .select("tbl", "col", "v", "cnt").collect()
-        .map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3))))
-        .groupBy(_._1)
-        .map { case (k, vs) => k -> vs.map(_._2).toMap }
-    }
+    HistCounts.cached(spark, dir)
 
   /** Per-table SOURCE BYTES as observed by the last counter-affecting
     * stats write (VERDICT r16 item 2): the freshness testimony that guards
@@ -303,26 +311,11 @@ object StatsCatalog {
     * new value at ~1 row. Optional coverage like the other auxiliary
     * kinds; counters in a store WITHOUT this table never equality-price. */
   def srcBytes(spark: SparkSession, dir: String): Map[String, Long] =
-    cachedRead("table_src_bytes", dir)(Map.empty[String, Long]) { base =>
-      if (!new java.io.File(s"$base/table_src_bytes").exists())
-        Map.empty[String, Long]
-      else spark.read.parquet(s"$base/table_src_bytes")
-        .select("tbl", "src_bytes").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    SrcBytes.cached(spark, dir)
 
   /** Per-(table, array column) generator fan-out: (avg element count,
     * ceiling-rounded; max element count) — the size-estimate correction
-    * for plans that explode the column. */
+    * for plans that explode the column. Optional coverage. */
   def fanout(spark: SparkSession, dir: String): Map[(String, String), (Long, Long)] =
-    cachedRead("column_fanout", dir)(Map.empty[(String, String), (Long, Long)]) { base =>
-      // optional coverage like hist/spans: a fanout-less store caches the
-      // empty answer instead of re-paying (and error-logging) a failed
-      // read on every planning
-      if (!new java.io.File(s"$base/column_fanout").exists())
-        Map.empty[(String, String), (Long, Long)]
-      else spark.read.parquet(s"$base/column_fanout")
-        .select("tbl", "col", "avg_len", "max_len").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    }
+    Fanout.cached(spark, dir)
 }

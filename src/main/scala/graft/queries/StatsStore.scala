@@ -135,7 +135,7 @@ object StatsStore {
     * become the `column_ndv` / `table_rows` / `column_fanout` relations.
     * This is the general ANALYZE the consumers plan from — the coverage
     * is whatever the caller asks, not a staged list. */
-  private def analyzeRows(s: SparkSession, tables: Seq[(String, Seq[String])],
+  private[graft] def analyzeRows(s: SparkSession, tables: Seq[(String, Seq[String])],
       resolve: String => DataFrame):
       (Seq[(String, String, Seq[Long])], Seq[(String, Long)], Seq[(String, String, Long, Long)]) = {
     val hll = udaf(new graft.functions.HllSketch())
@@ -509,9 +509,8 @@ object StatsStore {
       extra: Map[String, (org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] = Map.empty)
 
-  private val ManagedTables = Set("column_ndv", "table_rows", "column_hist",
-    "column_span", "column_fanout", "column_hist_counts", "table_src_bytes",
-    "_GRAFT_COMPLETE", "_GRAFT_BASE", "_GRAFT_CLEAN")
+  private val ManagedTables = graft.plans.StatsCatalog.Kinds.map(_.name).toSet ++
+    Set("_GRAFT_COMPLETE", "_GRAFT_BASE", "_GRAFT_CLEAN")
 
   /** In-JVM memo of IMMUTABLE generation content (round 19): a CAS
     * append's base is almost always the generation THIS JVM just
@@ -564,52 +563,28 @@ object StatsStore {
     }
   }
 
+  /** A generation's content through the catalog's per-kind readers. A
+    * `column_ndv` without registers (a regs-less store) throws: a CAS
+    * merge extends registers, and a stored estimate alone cannot be
+    * merged. */
   private def readStatsGen(s: SparkSession, gen: String): StatsContent = {
+    import graft.plans.StatsCatalog.{Fanout, Hist, HistCounts, Ndv, Rows, SrcBytes, Spans}
     // the managed tables and every unmanaged carry are INDEPENDENT
     // single-task parquet reads — overlap them (round 19, guide §2.6:
     // sequential reads paid ~7 driver job latencies back to back)
     val ndv = Par.fork {
-      s.read.parquet(s"$gen/column_ndv").select("tbl", "col", "regs").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getSeq[Long](2).toSeq)).toSeq
+      Ndv.read(s, gen).map { case (t, c, _, regs) =>
+        (t, c, regs.getOrElse(throw new IllegalStateException(
+          s"stats generation $gen stores no HLL registers for $t.$c — " +
+            "a CAS merge cannot extend a regs-less column_ndv")))
+      }
     }
-    val rows = Par.fork {
-      s.read.parquet(s"$gen/table_rows").select("tbl", "row_count").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    }
-    val hist = Par.fork {
-      if (!new java.io.File(s"$gen/column_hist").exists()) Seq.empty[HistRow]
-      else s.read.parquet(s"$gen/column_hist")
-        .select("tbl", "col", "bucket", "up_to", "cum_cnt").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-        .toSeq
-    }
-    val span = Par.fork {
-      if (!new java.io.File(s"$gen/column_span").exists()) Seq.empty[SpanRow]
-      else s.read.parquet(s"$gen/column_span")
-        .select("tbl", "lo_col", "hi_col", "med_span", "max_span").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
-        .toSeq
-    }
-    val fanout = Par.fork {
-      if (!new java.io.File(s"$gen/column_fanout").exists()) Seq.empty[FanRow]
-      else s.read.parquet(s"$gen/column_fanout")
-        .select("tbl", "col", "avg_len", "max_len").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    }
-    val histCounts = Par.fork {
-      if (!new java.io.File(s"$gen/column_hist_counts").exists()) Seq.empty[CountRow]
-      else s.read.parquet(s"$gen/column_hist_counts")
-        .select("tbl", "col", "v", "cnt").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    }
-    val srcBytes = Par.fork {
-      if (!new java.io.File(s"$gen/table_src_bytes").exists()) Seq.empty[(String, Long)]
-      else s.read.parquet(s"$gen/table_src_bytes")
-        .select("tbl", "src_bytes").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-    }
+    val rows = Par.fork(Rows.read(s, gen))
+    val hist = Par.fork(Hist.read(s, gen))
+    val span = Par.fork(Spans.read(s, gen))
+    val fanout = Par.fork(Fanout.read(s, gen))
+    val histCounts = Par.fork(HistCounts.read(s, gen))
+    val srcBytes = Par.fork(SrcBytes.read(s, gen))
     val extra = Option(new java.io.File(gen).listFiles()).getOrElse(Array.empty)
       .filter(f => !ManagedTables.contains(f.getName)).toSeq.map { f =>
         Par.fork {
@@ -675,28 +650,21 @@ object StatsStore {
   }
 
   /** The seven planner-catalog maps, derived DRIVER-SIDE from content the
-    * publisher already holds — exactly what each [[graft.plans.StatsCatalog]]
-    * reader would compute from the written parquet (Round20Spec pins
-    * equality kind by kind). Priming the catalog at publish time makes the
-    * first planning against a freshly built store cost ZERO Spark jobs;
-    * before round 20 every lifecycle-class query paid one
-    * read-parquet-and-collect job per kind per invocation (scratch roots
-    * are fresh paths each invocation, so the read memo never hit). */
-  private def catalogMapsOf(c: StatsContent): Map[String, AnyRef] = Map(
-    "column_ndv" -> c.ndv.map { case (t, cc, regs) =>
-      val est = estFromRegs(regs)
-      (t, cc) -> (est, graft.plans.StatsCatalog.refineNdv(est, Some(regs)))
-    }.toMap,
-    "table_rows" -> c.rows.toMap,
-    "column_hist" -> c.hist.groupBy(r => (r._1, r._2))
-      .map { case (k, vs) =>
-        k -> vs.map(r => (r._3, r._4, r._5)).sortBy(_._1)
-          .map(t => (t._2, t._3)).toIndexedSeq },
-    "column_hist_counts" -> c.histCounts.groupBy(r => (r._1, r._2))
-      .map { case (k, vs) => k -> vs.map(r => r._3 -> r._4).toMap },
-    "table_src_bytes" -> c.srcBytes.toMap,
-    "column_span" -> c.span.map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap,
-    "column_fanout" -> c.fanout.map(r => (r._1, r._2) -> (r._3, r._4)).toMap)
+    * publisher already holds through each [[graft.plans.StatsCatalog]]
+    * kind's own derivation — the one a cold read of the written parquet
+    * applies, so primed == re-read by construction (Round20Spec pins it).
+    * The NDV estimate is [[estFromRegs]], the JVM mirror of the
+    * [[estExpr]] the writer stores. Priming the catalog at publish time
+    * makes the first planning against a freshly built store cost ZERO
+    * Spark jobs (scratch roots are fresh paths each invocation, so the
+    * read memo would never hit). */
+  private def catalogMapsOf(c: StatsContent): Map[String, AnyRef] = {
+    import graft.plans.StatsCatalog.{Fanout, Hist, HistCounts, Kind, Ndv, Rows, SrcBytes, Spans}
+    def entry[R](k: Kind[R, _ <: AnyRef], rows: Seq[R]) = k.name -> (k.derive(rows): AnyRef)
+    Map(entry(Ndv, c.ndv.map { case (t, cc, regs) => (t, cc, estFromRegs(regs), Some(regs)) }),
+      entry(Rows, c.rows), entry(Hist, c.hist), entry(HistCounts, c.histCounts),
+      entry(SrcBytes, c.srcBytes), entry(Spans, c.span), entry(Fanout, c.fanout))
+  }
 
   /** Test seam: fired between a CAS attempt's base read and its publish,
     * so specs can interleave a FOREIGN writer deterministically inside

@@ -171,8 +171,8 @@ object StreamServe {
     * store exactly like the batch one: at 100 TB this is how a standing
     * ingest keeps the PLANNER current without ever re-scanning the fact
     * table — the stream's O(registers + one counter) state IS the
-    * catalog refresh. Published through IndexStore generations like every
-    * other store (readers pin complete generations mid-rebuild). */
+    * catalog refresh. Published through the CAS upsert like the unified
+    * root (readers pin complete generations mid-rebuild). */
   def ensureStreamedStats(s: SparkSession, dir: String): String = {
     val root = StatsStore.fixtureRoot("graft_stats_streamed", dir)
     // Returns the store ROOT, not the resolved generation (ADVICE r13):
@@ -183,45 +183,69 @@ object StreamServe {
     // generation resolution against the root, exactly like batch ensureStats.
     root.intern.synchronized {
       if (graft.IndexStore.latestPathCached(root).isEmpty) {
-        import s.implicits._
-        // events.user_id NDV: global registers = element-wise max of the
-        // persisted per-type STREAMED registers (q282's store)
-        val evNdv = s.read.parquet(s"${ensureStreamedHll(s, dir)}/hll_regs")
-          .agg(expr(
-            "aggregate(collect_list(regs), array_repeat(cast(0 as bigint), 64), " +
-              "(acc, r) -> zip_with(acc, r, (a, b) -> greatest(a, b)))").as("regs"))
-          .select(lit("events").as("tbl"), lit("user_id").as("col"),
-            StatsStore.estExpr("regs").as("ndv_est"))
-        // events row count: a bounded streaming aggregate; counts only
-        // grow, so the LAST update is the total
-        val ss = streamBuildSession(s)
-        val cnt = new java.util.concurrent.atomic.AtomicLong(-1L)
-        runBounded(graft.streaming.EventStreams.readEventStream(ss, dir)
-            .groupBy().count()) { b =>
-          b.collect().foreach(r => cnt.set(r.getLong(0)))
-        }
-        // batch dimensions: exact counts + HLL NDV on the join keys
-        val hll = udaf(new graft.functions.HllSketch())
-        val dimNdv = Seq(
-          ("customer", "c_custkey", Tables.customer(s, dir)),
-          ("orders", "o_custkey", Tables.orders(s, dir))).map { case (t, c, df) =>
-          df.agg(hll(col(c).cast("string")).as("regs"))
-            .select(lit(t).as("tbl"), lit(c).as("col"),
-              StatsStore.estExpr("regs").as("ndv_est"))
-        }.reduce(_ unionByName _)
-        val rowRows = Seq(
-          ("customer", Tables.customer(s, dir).count()),
-          ("events", cnt.get()),
-          ("orders", Tables.orders(s, dir).count()))
-          .toDF("tbl", "row_count")
-        graft.IndexStore.publish(root) { g =>
-          dimNdv.unionByName(evNdv).coalesce(1).write.parquet(s"$g/column_ndv")
-          rowRows.coalesce(1).write.parquet(s"$g/table_rows")
-        }
-        graft.plans.StatsCatalog.invalidate(root)
+        // batch dimensions: exact counts + HLL registers on the join keys,
+        // one aggregate scan per table
+        val (dimNdv, dimRows, _) = StatsStore.analyzeRows(s,
+          Seq("customer" -> Seq("c_custkey"), "orders" -> Seq("o_custkey")),
+          StatsStore.tableByName(s, dir, _))
+        val (regs, cnt) = streamedEventsStats(s, dir)
+        publishStreamedFactStats(s, root, cnt, regs, Map.empty,
+          dimNdv = dimNdv, dimRows = dimRows)
       }
     }
     root
+  }
+
+  /** The stream-maintained events entries both streamed roots publish: the
+    * user_id registers (element-wise max of the persisted per-type
+    * STREAMED registers — a max of subgroup maxima is the group maximum)
+    * and the row count of a bounded streaming `groupBy().count()` (counts
+    * only grow, so the LAST update is the total; -1 when the stream
+    * delivered nothing). */
+  private def streamedEventsStats(s: SparkSession, dir: String): (Seq[Long], Long) = {
+    val regs = s.read.parquet(s"${ensureStreamedHll(s, dir)}/hll_regs")
+      .select("regs").collect().map(_.getSeq[Long](0))
+      .foldLeft(Seq.fill(64)(0L))((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) })
+    val cnt = new java.util.concurrent.atomic.AtomicLong(-1L)
+    runBounded(graft.streaming.EventStreams.readEventStream(streamBuildSession(s), dir)
+        .groupBy().count()) { b =>
+      b.collect().foreach(r => cnt.set(r.getLong(0)))
+    }
+    (regs, cnt.get())
+  }
+
+  /** Publish the stream-maintained fact entries (row count, user_id
+    * registers, per-day-counter ts histogram) — plus any batch dimension
+    * entries the caller carries — through the CAS upsert: the stream
+    * half's writer for both the streamed and the unified root.
+    * Degenerate-publish guard (VERDICT r14 what's wrong 2): `cnt` stays at
+    * its -1 sentinel when the stream delivered NO batches with rows —
+    * publishing it would hand the reorder a negative row count to price
+    * with, so an empty stream REFUSES loudly instead (consumers then plan
+    * without fact stats, the documented inactive posture). */
+  private[graft] def publishStreamedFactStats(s: SparkSession, root: String,
+      cnt: Long, regs: Seq[Long], dayCounts: Map[Long, Long],
+      srcBytes: Long = 0L, dimNdv: Seq[(String, String, Seq[Long])] = Nil,
+      dimRows: Seq[(String, Long)] = Nil): String = {
+    if (cnt < 0L)
+      throw new IllegalStateException(
+        "streamed stats build saw an empty events stream — refusing to " +
+          "publish a row_count sentinel (-1) into the planner catalog")
+    // boundary derivation shared with the batch builder and the O(delta)
+    // counter merge (one definition, byte-identical rows); the day
+    // counters themselves persist as the managed counter kind, so a later
+    // batch APPEND can extend the stream-built histogram exactly
+    val histRows = StatsStore.boundariesFromCounts("events", "ts", dayCounts)
+    val counters = dayCounts.toSeq.sortBy(_._1)
+      .map { case (v, n) => ("events", "ts", v, n) }
+    StatsStore.upsertStats(s, root,
+      dimNdv :+ (("events", "user_id", regs)), dimRows :+ ("events" -> cnt), histRows, counters,
+      // freshness testimony for the counter guard (VERDICT r16 item 2):
+      // a writer that cannot state the bytes it saw publishes 0, and the
+      // guard then keeps the counters range-only (boundaries stay served;
+      // equality/IN pricing refuses) — the honest posture for stream
+      // state whose source inventory the publisher never scanned
+      if (srcBytes > 0L) Seq("events" -> srcBytes) else Nil)
   }
 
   /** ONE stats root maintained by BOTH writers (VERDICT r13 item 5: the
@@ -235,38 +259,6 @@ object StreamServe {
     * can race without losing each other's tables. Consumers configure
     * this one root and plan from stream-maintained fact stats AND batch
     * dim stats in the same plan. */
-  /** Publish the stream-maintained fact entries (row count, user_id
-    * registers, per-day-counter ts histogram) into the unified root
-    * through the CAS upsert. Degenerate-publish guard (VERDICT r14 what's
-    * wrong 2): `cnt` stays at its -1 sentinel when the stream delivered NO
-    * batches with rows — publishing it would hand the reorder a negative
-    * row count to price with, so an empty stream REFUSES loudly instead
-    * (consumers then plan without fact stats, the documented inactive
-    * posture). */
-  private[graft] def publishStreamedFactStats(s: SparkSession, root: String,
-      cnt: Long, regs: Seq[Long], dayCounts: Map[Long, Long],
-      srcBytes: Long = 0L): String = {
-    if (cnt < 0L)
-      throw new IllegalStateException(
-        "unified stats build saw an empty events stream — refusing to " +
-          "publish a row_count sentinel (-1) into the planner catalog")
-    // boundary derivation shared with the batch builder and the O(delta)
-    // counter merge (one definition, byte-identical rows); the day
-    // counters themselves persist as the managed counter kind, so a later
-    // batch APPEND can extend the stream-built histogram exactly
-    val histRows = StatsStore.boundariesFromCounts("events", "ts", dayCounts)
-    val counters = dayCounts.toSeq.sortBy(_._1)
-      .map { case (v, n) => ("events", "ts", v, n) }
-    StatsStore.upsertStats(s, root,
-      Seq(("events", "user_id", regs)), Seq("events" -> cnt), histRows, counters,
-      // freshness testimony for the counter guard (VERDICT r16 item 2):
-      // a writer that cannot state the bytes it saw publishes 0, and the
-      // guard then keeps the counters range-only (boundaries stay served;
-      // equality/IN pricing refuses) — the honest posture for stream
-      // state whose source inventory the publisher never scanned
-      if (srcBytes > 0L) Seq("events" -> srcBytes) else Nil)
-  }
-
   def ensureUnifiedStats(s: SparkSession, dir: String): String = {
     val root = StatsStore.fixtureRoot("graft_stats_unified", dir)
     root.intern.synchronized {
@@ -293,16 +285,7 @@ object StreamServe {
         // boundaries (day start + 86399999999 µs) keep the histogram
         // sound for raw-timestamp pricing: cum(boundary) counts exactly
         // the values ≤ boundary.
-        val regRows = s.read.parquet(s"${ensureStreamedHll(s, dir)}/hll_regs")
-          .select("regs").collect().map(_.getSeq[Long](0))
-        val merged = regRows
-          .reduce((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) }).toSeq
-        val ss = streamBuildSession(s)
-        val cnt = new java.util.concurrent.atomic.AtomicLong(-1L)
-        runBounded(graft.streaming.EventStreams.readEventStream(ss, dir)
-            .groupBy().count()) { b =>
-          b.collect().foreach(r => cnt.set(r.getLong(0)))
-        }
+        val (merged, cnt) = streamedEventsStats(s, dir)
         val ss2 = streamBuildSession(s)
         val dayCounts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
         runBounded(graft.streaming.EventStreams.readEventStream(ss2, dir)
@@ -315,7 +298,7 @@ object StreamServe {
         import scala.jdk.CollectionConverters._
         // the stream reads the same fixture files the batch scan plans
         // over, so the batch scan's bytes ARE the stream's source bytes
-        publishStreamedFactStats(s, root, cnt.get(), merged,
+        publishStreamedFactStats(s, root, cnt, merged,
           dayCounts.asScala.toMap,
           StatsStore.scanBytesFor(Tables.events(s, dir)))
         // batch half, part 2 (VERDICT r14 item 1): the span catalog (with

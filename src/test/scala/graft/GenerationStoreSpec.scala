@@ -59,11 +59,7 @@ class GenerationStoreSpec extends AnyFunSuite {
       Files.write(g.resolve("_GRAFT_COMPLETE"), Array.emptyByteArray)
     }
     Files.write(Paths.get(root, "LATEST"), "3".getBytes)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(p1))
+    IndexStore.deleteRecursively(new java.io.File(p1))
     // the memoized generation is gone: the cache hit must detect the
     // dangling path (completion-marker stat) and re-resolve, not hard-fail
     assert(IndexStore.latestPathCached(root).contains(IndexStore.genPath(root, 3L)))
@@ -213,11 +209,7 @@ class GenerationStoreSpec extends AnyFunSuite {
       (n, r)
     }
     val expected = readStats(fullGen)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(s"$scratch/events_base")) // base is gone
+    IndexStore.deleteRecursively(new java.io.File(s"$scratch/events_base")) // base is gone
     val g2 = queries.StatsStore.appendEventsStats(spark, root,
       ev.filter(expr("event_id % 5 = 0")))
     assert(readStats(g2) === expected,
@@ -244,11 +236,7 @@ class GenerationStoreSpec extends AnyFunSuite {
       spark.read.parquet(s"$g/column_hist")
         .collect().map(r => (r.getInt(2), r.getLong(3), r.getLong(4))).sortBy(_._1).toSeq
     val expected = readHist(fullGen)
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(s"$scratch/events_base")) // base is gone
+    IndexStore.deleteRecursively(new java.io.File(s"$scratch/events_base")) // base is gone
     val g2 = queries.StatsStore.appendTableStats(spark, root, "events",
       ev.filter(expr("event_id % 5 = 0")), Seq("user_id"), Seq("ts"))
     assert(readHist(g2) === expected,
@@ -358,11 +346,7 @@ class GenerationStoreSpec extends AnyFunSuite {
       graft.plans.StatsCatalog.invalidate()
       assert(graft.plans.StatsCatalog.ndv(spark, root) == Map(key -> 100L))
       // replace the generation's table bytes in place (path unchanged)
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-        f.delete(); ()
-      }
-      deleteRec(new java.io.File(s"$g1/column_ndv"))
+      IndexStore.deleteRecursively(new java.io.File(s"$g1/column_ndv"))
       writeNdv(g1, 555L)
       graft.plans.StatsCatalog.TtlNanos = 1L
       Thread.sleep(5)
@@ -642,11 +626,7 @@ class GenerationStoreSpec extends AnyFunSuite {
         "expired memo did not pick up the foreign republish")
       // a refresh that FAILS keeps serving the last good value (stale
       // beats none for plan hints): torch the store, read again
-      def deleteRec(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-        f.delete(); ()
-      }
-      deleteRec(new java.io.File(root))
+      IndexStore.deleteRecursively(new java.io.File(root))
       Thread.sleep(5)
       assert(graft.plans.StatsCatalog.ndv(spark, root) == Map(key -> 200L),
         "failed refresh should serve the stale value, not empty")
