@@ -64,8 +64,8 @@ object RpmVersion {
             val c = a.substring(si, i).compareTo(b.substring(sj, j))
             if (c != 0) return Integer.signum(c)
           } else {
-            var si = i; while (i < a.length && a(i).isLetter) i += 1
-            var sj = j; while (j < b.length && b(j).isLetter) j += 1
+            val si = i; while (i < a.length && a(i).isLetter) i += 1
+            val sj = j; while (j < b.length && b(j).isLetter) j += 1
             val c = a.substring(si, i).compareTo(b.substring(sj, j))
             if (c != 0) return Integer.signum(c)
           }
@@ -143,7 +143,7 @@ object ApkVersion {
 
   private[functions] def parse(v: String): Parsed = {
     var i = 0
-    var nums = List.newBuilder[String]
+    val nums = List.newBuilder[String]
     // numeric dot components
     var reading = true
     while (reading && i < v.length && v(i).isDigit) {

@@ -316,7 +316,7 @@ object SketchStats {
 
   /** Counter-domain key of a literal compared against column `a`:
     * timestamp columns lower to day-END epoch micros — the domain the
-    * counter builder persists (StatsStore.histCountDomain's mirror) —
+    * counter builder persists (StatsStore.counterDomain's mirror) —
     * and every other Long domain stays raw. */
   private[plans] def counterKey(
       a: org.apache.spark.sql.catalyst.expressions.AttributeReference,
@@ -583,8 +583,7 @@ object SketchStats {
 
   final case class ReorderJoinsFromNdv() extends Rule[LogicalPlan]
       with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression}
-    import SketchStats.{ndvOf, scanOf, stripAttrProject}
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression}
 
     /** Row estimate for a single-scan dim: the catalog count, refined per
       * filter conjunct on a covered column —
@@ -609,8 +608,8 @@ object SketchStats {
     private def scanRows(dim: LogicalPlan, rows: Map[String, Long],
         ndv: Map[(String, String), Long],
         hist: Map[(String, String), IndexedSeq[(Long, Long)]],
-        cnts: Map[(String, String), Map[Long, Long]] = Map.empty,
-        bytes: Map[String, Long] = Map.empty): Option[Long] = {
+        cnts: Map[(String, String), Map[Long, Long]],
+        bytes: Map[String, Long]): Option[Long] = {
       import org.apache.spark.sql.catalyst.expressions.{GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual}
       def conjuncts(p: LogicalPlan): Seq[Expression] = p match {
         case Filter(cond, c) => splitConjunctivePredicates(cond) ++ conjuncts(c)
@@ -1031,7 +1030,6 @@ object SketchStats {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Coalesce, Divide, EqualTo, Expression, Literal, NamedExpression}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, MaxBy, Min, MinBy, Sum}
     import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType}
-    import SketchStats.{ndvOf, scanOf, stripAttrProject}
 
     /** Minimum catalog-priced rows-per-key fanout for the extra pass to
       * pay for itself (conservative: below this the partial agg mostly
@@ -1185,7 +1183,7 @@ object SketchStats {
         rows: Map[String, Long],
         ndv: Map[(String, String), Long],
         bytes: Map[String, Long],
-        recorder: (String, String) => Unit = (_, _) => ()): Option[LogicalPlan] = {
+        recorder: (String, String) => Unit): Option[LogicalPlan] = {
       val aggPairs = resultExprs.collect {
         case al @ Alias(ae: AggregateExpression, _) => (al, ae)
       }

@@ -85,7 +85,7 @@ object StreamServe {
       (flag, bucket.toLong, cnt)
     }
     graft.IndexStore.publish(root) { g =>
-      buf.toDF("flag", "id", "cnt").coalesce(1).write.parquet(s"$g/hdr_regs")
+      graft.IndexStore.writeLocal(buf.toDF("flag", "id", "cnt"), s"$g/hdr_regs")
     }
   }
 
@@ -156,7 +156,7 @@ object StreamServe {
       rows: Seq[(String, Seq[Long])], root: String): String = {
     import ss.implicits._
     graft.IndexStore.publish(root) { g =>
-      rows.toDF("flag", "regs").coalesce(1).write.parquet(s"$g/hll_regs")
+      graft.IndexStore.writeLocal(rows.toDF("flag", "regs"), s"$g/hll_regs")
     }
   }
 
@@ -185,7 +185,7 @@ object StreamServe {
       if (graft.IndexStore.latestPathCached(root).isEmpty) {
         // batch dimensions: exact counts + HLL registers on the join keys,
         // one aggregate scan per table
-        val (dimNdv, dimRows, _) = StatsStore.analyzeRows(s,
+        val (dimNdv, dimRows, _) = StatsStore.analyzeRows(
           Seq("customer" -> Seq("c_custkey"), "orders" -> Seq("o_custkey")),
           StatsStore.tableByName(s, dir, _))
         val (regs, cnt) = streamedEventsStats(s, dir)
@@ -281,17 +281,16 @@ object StreamServe {
         // streamed HLL store, and the ts HISTOGRAM from a streamed
         // per-day counter (the second stream-upkept stats kind): per-day
         // counts only grow, so the last update per day is final, and the
-        // state is bounded by the DATE DOMAIN, not the row count. Day-END
-        // boundaries (day start + 86399999999 µs) keep the histogram
-        // sound for raw-timestamp pricing: cum(boundary) counts exactly
-        // the values ≤ boundary.
+        // state is bounded by the DATE DOMAIN, not the row count. The day
+        // key is the batch counters' own lowering (StatsStore.counterDomain:
+        // day-END micros), so appendTableStats merges both under one
+        // definition, and day-end boundaries keep the histogram sound for
+        // raw-timestamp pricing: cum(boundary) counts exactly the values ≤
+        // boundary.
         val (merged, cnt) = streamedEventsStats(s, dir)
-        val ss2 = streamBuildSession(s)
+        val dayStream = graft.streaming.EventStreams.readEventStream(streamBuildSession(s), dir)
         val dayCounts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-        runBounded(graft.streaming.EventStreams.readEventStream(ss2, dir)
-            .groupBy(expr(
-              "unix_micros(date_trunc('DAY', cast(ts as timestamp))) + 86399999999")
-              .as("d"))
+        runBounded(dayStream.groupBy(StatsStore.counterDomain(dayStream, "ts").as("d"))
             .count()) { b =>
           b.collect().foreach(r => dayCounts.put(r.getLong(0), r.getLong(1)))
         }

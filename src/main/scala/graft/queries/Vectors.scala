@@ -1401,8 +1401,9 @@ object Vectors {
           val p1 = graft.IndexStore.publish(aroot) { g =>
             // independent tables — overlap (round 19, guide §2.6)
             Par.all(Seq(
-              () => cent.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }
-                .toDF("cluster", "cv").coalesce(1).write.parquet(s"$g/centroids"),
+              () => graft.IndexStore.writeLocal(
+                cent.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toDF("cluster", "cv"),
+                s"$g/centroids"),
               () => all
                 .withColumn("cluster", graft.operators.KMeans.assignColumn(cent, "v"))
                 .write.partitionBy("cluster").parquet(s"$g/codes")))

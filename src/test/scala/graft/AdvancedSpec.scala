@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Round-9 Advanced-module invariants: the IVM delta-join identity, the
   * schema-evolution union == physical mergeSchema read, and Shapley

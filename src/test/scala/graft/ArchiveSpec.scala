@@ -6,7 +6,6 @@ import org.apache.commons.compress.archivers.ar.{ArArchiveEntry, ArArchiveOutput
 import org.apache.commons.compress.archivers.cpio.{CpioArchiveEntry, CpioArchiveOutputStream}
 import org.apache.commons.compress.compressors.xz.XZCompressorOutputStream
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.ArchiveCodec

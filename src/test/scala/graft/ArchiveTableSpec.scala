@@ -17,7 +17,6 @@ class ArchiveTableSpec extends AnyFunSuite {
 
   /** Three archives (tar, tar+gzip, zip) in a fresh temp dir. */
   private def writeFixtures(): String = {
-    import org.apache.spark.sql.functions._
     val dir = queries.StatsStore.scratchDir("graft_dsv2")
     import spark.implicits._
     val rows = Seq(

@@ -295,6 +295,46 @@ class GenerationStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("a histogram domain between the caps stores boundaries from one scan and no counters") {
+    import org.apache.spark.sql.functions._
+    // a domain past the counter carry cap but inside the boundary cap:
+    // the boundaries still come from the exact per-value counts, and the
+    // counters (with their source-bytes testimony) are skipped
+    val orders = Tables.orders(spark, SparkTestHarness.Sf0001)
+    val counts = orders.select(col("o_custkey").cast("long").as("v"))
+      .filter(col("v").isNotNull)
+      .groupBy("v").agg(count(lit(1)).as("c"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts.size > 2, s"fixture domain too small: ${counts.size}")
+    queries.StatsStore.withCaps(carryRows = counts.size - 1, histDomain = counts.size + 1L) {
+      val root = queries.StatsStore.scratchDir("graft_hist_mid") + "/store"
+      queries.StatsStore.analyze(spark, SparkTestHarness.Sf0001, root,
+        Nil, hist = Seq("orders" -> Seq("o_custkey")))
+      val g = graft.plans.StatsCatalog.resolveBase(root)
+      val hist = graft.plans.StatsCatalog.Hist.read(spark, g)
+      assert(hist.sortBy(_._3) ===
+        queries.StatsStore.boundariesFromCounts("orders", "o_custkey", counts),
+        "boundaries diverged from the exact per-value counts")
+      assert(graft.plans.StatsCatalog.HistCounts.read(spark, g).isEmpty,
+        "a domain past the carry cap stored counters")
+      assert(graft.plans.StatsCatalog.SrcBytes.read(spark, g).isEmpty,
+        "source bytes were stored without the counters they testify for")
+    }
+  }
+
+  test("upsertFanoutStats stores the avg/max element counts of a direct size() aggregate") {
+    import org.apache.spark.sql.functions._
+    val emb = Tables.embeddings(spark, SparkTestHarness.Sf0001)
+    val r = emb.agg(sum(size(col("embedding"))), max(size(col("embedding"))),
+      count(lit(1))).head()
+    val (sl, mx, n) = (r.getLong(0), r.getInt(1).toLong, r.getLong(2))
+    assert(n > 0L)
+    val g = queries.StatsStore.upsertFanoutStats(spark, freshRoot(), "embeddings",
+      emb, Seq("embedding"))
+    assert(graft.plans.StatsCatalog.Fanout.read(spark, g) ===
+      Seq(("embeddings", "embedding", (sl + n - 1) / n, mx)))
+  }
+
   test("a batch append extends a STREAM-built histogram: merged boundaries == from-scratch") {
     import org.apache.spark.sql.functions._
     // the annex claim verified: publishStreamedFactStats persists its day

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.KMeans

@@ -1428,17 +1428,12 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("reorder: an IN-filtered dim commutes below the expansion when counters price it") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, LogicalPlan}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
     // the reorder half of VERDICT r15 item 3: scanRows prices the IN-list
     // at the exact counter-mass sum (~27 rows at sf0.001), commuting the
     // sliced dim below the expanding full-events join; the SAME store
     // built WITHOUT counters leaves the IN conjunct unpriced and written
     // order holds — the negative isolates the counter contribution.
-    def tablesOf(p: LogicalPlan): Seq[String] =
-      p.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          graft.plans.StatsCatalog.tableOf(lr)
-      }.flatten
     def chain(s: org.apache.spark.sql.SparkSession) = {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
       val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"))

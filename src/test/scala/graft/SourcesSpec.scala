@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -70,7 +68,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("S4: from_xml parses rendered repomd-style XML records") {
-    import spark.implicits._
     val xml = Tables.packages(spark, dir)
       .select(concat(lit("<pkg><name>"), col("name"), lit("</name><ver>"),
         col("version"), lit("</ver></pkg>")).as("x"))
